@@ -3,6 +3,8 @@ package graft.metrics
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
 
+import graft.metrics.MetricsJob.labelValue
+
 /** OAI request instrumentation with the reference's exact semantics
   * (metrics.py:52-70 counter definitions; metrics.py:224-246 log_request):
   *
@@ -70,14 +72,6 @@ final class RequestMetrics {
     b.result()
   }
 
-  /** Prometheus label-value escaping (exposition format §label values:
-    * backslash, double-quote and newline must be escaped). Label values
-    * here include the raw client User-Agent — one unescaped quote from
-    * one client would otherwise invalidate the whole scrape.
-    */
-  private def esc(v: String): String =
-    v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
-
   /** Prometheus exposition (counter + summary syntax). */
   def prometheus: String = {
     val sb = new StringBuilder
@@ -87,7 +81,7 @@ final class RequestMetrics {
     sb ++= "# HELP requests_per_user_agent Number of external catalogue requests received per user-agent\n"
     sb ++= "# TYPE requests_per_user_agent counter\n"
     requestsPerUserAgent.toSeq.sortBy(_._1).foreach { case (ua, n) =>
-      sb ++= s"""requests_per_user_agent{harvester="${esc(ua)}"} $n\n"""
+      sb ++= s"""requests_per_user_agent{harvester="${labelValue(ua)}"} $n\n"""
     }
     sb ++= "# HELP requests_succeeded Number of successful catalogue requests\n"
     sb ++= "# TYPE requests_succeeded counter\n"
@@ -98,7 +92,7 @@ final class RequestMetrics {
     sb ++= "# HELP requests_duration Response time in milliseconds\n"
     sb ++= "# TYPE requests_duration summary\n"
     durations.toSeq.sortBy(_._1).foreach { case ((verb, prefix), (n, sum)) =>
-      val l = s"""{verb="${esc(verb)}",metadataPrefix="${esc(prefix)}"}"""
+      val l = s"""{verb="${labelValue(verb)}",metadataPrefix="${labelValue(prefix)}"}"""
       sb ++= s"requests_duration_count$l $n\n"
       sb ++= s"requests_duration_sum$l $sum\n"
     }

@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * dense clusters with tiny diameters (2-3 rounds); for adversarial
   * or unknown graph shapes use [[componentsStar]] — same output
   * contract, O(log n) rounds regardless of diameter (measured
-  * comparison in PERF.md / tools.ScaleCheck).
+  * comparison in PERF.md, "Components at 10× and on an adversarial
+  * chain").
   */
 object ConnectedComponents {
 

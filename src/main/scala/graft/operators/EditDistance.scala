@@ -108,9 +108,9 @@ object EditDistance {
     * pairs strings on EVERY shared gram, so its work is
     * Σ_gram |bucket|², and a frequent gram ("the ", a shared format
     * prefix) makes that quadratic in corpus size — the round-16
-    * ScaleCheck probe measured the candidate join at ~60× the
-    * enumeration cost on a 100k mostly-distinct dictionary. The
-    * prefix filter (Chaudhuri et al., ICDE 2006; Xiao et al.'s
+    * probe (PERF.md, "EditDistance q-gram kernel") measured the
+    * candidate join at ~60× the enumeration cost on a 100k
+    * mostly-distinct dictionary. The prefix filter (Chaudhuri et al., ICDE 2006; Xiao et al.'s
     * Ed-Join, VLDB 2008 — public literature) bounds that: order gram
     * OCCURRENCES by global rarity and keep only each string's
     * `maxDist·q + 1` rarest as join keys. Soundness: within distance

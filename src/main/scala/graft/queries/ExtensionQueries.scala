@@ -391,7 +391,7 @@ object DedupQueries extends QueryGroup {
     * `maxDist·q+1` globally-RAREST gram occurrences instead of every
     * shared gram, so frequent grams (shared formatting) never drive
     * the Σ|bucket|² candidate join that dominated the round-16
-    * ScaleCheck probe. Same oracle SQL as `dedup_edit_distance`: the
+    * probe (PERF.md). Same oracle SQL as `dedup_edit_distance`: the
     * hash pins result-set equality between the two candidate plans.
     */
   val editDistancePrefix: QueryDef = QueryDef(

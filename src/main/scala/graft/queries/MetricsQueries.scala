@@ -61,14 +61,14 @@ object MetricsQueries extends QueryGroup {
         "FROM documents GROUP BY source ORDER BY source"))
 
   /** A4 maintained INCREMENTALLY from the change feed
-    * ([[graft.metrics.IncrementalMetrics]], round 16): bootstrap at
-    * v0, then fold each version's typed events — append (inserts),
-    * change-feed merge (status flips, so update pre/post pairs MOVE
-    * the live contribution), DV delete — one BATCH-sized aggregate
-    * per version, zero corpus recounts. In-gate the folded state is
-    * asserted equal to [[graft.metrics.MetricsJob.run]] over the
-    * final table; the oracle restates the final counts in SQL, so
-    * the hash pins fold ≡ recount.
+    * ([[graft.metrics.MetricsMaintainer]]): one recount at v1, then ONE
+    * read at the tip folds the typed events of v2..v4 — append
+    * (inserts), change-feed merge (status flips, so update pre/post
+    * pairs MOVE the live contribution), DV delete — in one
+    * batch-sized aggregate, with no second recount. In-gate the folded
+    * gauges are asserted equal to [[graft.metrics.MetricsJob.run]]
+    * over the final table; the oracle restates the final counts in
+    * SQL, so the hash pins fold ≡ recount.
     */
   val a4Incremental: QueryDef = QueryDef(
     "a4_incremental_counts",
@@ -88,8 +88,8 @@ object MetricsQueries extends QueryGroup {
         graft.sources.TxTable.create(
           studies.filter(col("doc_id") % 2 === 0), root)           // v0
         graft.sources.TxTable.setChangeFeed(s, root, enabled = true) // v1
-        var state = graft.metrics.IncrementalMetrics.bootstrap(
-          graft.sources.TxTable.readVersion(s, root, 0L))
+        val maintainer = new graft.metrics.MetricsMaintainer(s, root)
+        maintainer.gauges                                          // recount
         graft.sources.TxTable.append(
           studies.filter(col("doc_id") % 2 === 1), root)           // v2
         graft.sources.TxTable.mergeInto(root,
@@ -100,17 +100,12 @@ object MetricsQueries extends QueryGroup {
           "doc_id", Seq("_direct_base_url", "_metadata"), "_del")  // v3
         graft.sources.TxTable.deleteWhere(s, root,
           col("doc_id") % 10 === 7)                                // v4
-        (1L to 4L).foreach { v =>
-          state = graft.metrics.IncrementalMetrics.applyTyped(state,
-            graft.sources.TxTable.readChangesTyped(s, root, v - 1, v))
-        }
-        val folded = state.toAggMetrics
+        val folded = maintainer.gauges                             // fold
+        require(maintainer.recounts == 1 && maintainer.folds == 1,
+          "the maintainer re-anchored instead of folding v2..v4")
         val recount = graft.metrics.MetricsJob.run(
           graft.sources.TxTable.read(s, root))
-        require(folded.recordsTotal == recount.recordsTotal &&
-          folded.recordsTotalWithoutDeleted ==
-            recount.recordsTotalWithoutDeleted &&
-          folded.perPublisher == recount.perPublisher,
+        require(folded == recount,
           "incremental fold diverged from the full recount")
         folded.perPublisher.map(p =>
           (p.baseUrl, p.records, p.recordsWithoutDeleted))

@@ -92,22 +92,6 @@ class RequestMetricsSpec extends SparkSpec {
     assert(page.contains("requests_total 2"))
   }
 
-  test("approx publisher path: one-pass totals, no per-publisher series") {
-    val s = spark
-    import s.implicits._
-    val studies = s.createDataset(Fixtures.all).toDF()
-    val exact = MetricsJob.run(studies)
-    val approx = MetricsJob.run(studies, approxPublishers = true)
-    // 2 publishers; HLL at 1% rsd is exact at this cardinality
-    assert(exact.publishersTotal == 2)
-    assert(approx.publishersTotal == exact.publishersTotal)
-    assert(approx.recordsTotal == exact.recordsTotal)
-    assert(approx.recordsTotalWithoutDeleted == exact.recordsTotalWithoutDeleted)
-    // the 100 TB path deliberately drops the per-publisher breakdown:
-    // an approximate total next to an exact series would contradict it
-    assert(approx.perPublisher.isEmpty)
-  }
-
   test("prometheus label values are escaped") {
     val m = new RequestMetrics
     m.record(Some("Identify"), None, Some("bad\"agent\nwith\\stuff"),
@@ -115,6 +99,46 @@ class RequestMetricsSpec extends SparkSpec {
     val text = m.prometheus
     assert(text.contains("""harvester="bad\"agent\nwith\\stuff""""))
     assert(!text.contains("bad\"agent\nwith"))
+  }
+
+  test("publisher label values are escaped on the gauge page") {
+    val page = MetricsJob.prometheus(AggMetrics(1L, 1L, 1L, Seq(
+      PublisherCounts("http://x/\"q\"\\p\nq", 1L, 1L))))
+    val label = """{publisher="http://x/\"q\"\\p\nq"}"""
+    assert(page.contains(s"publisher_records$label 1\n"))
+    assert(page.contains(s"publisher_records_without_deleted$label 1\n"))
+    // every line is a comment or `name{labels} value`: no raw newline
+    // or unescaped quote split a sample
+    assert(page.split("\n").forall(l =>
+      l.startsWith("# ") || l.matches("""[a-z_]+(\{publisher="(\\.|[^"\\])*"\})? -?\d+""")))
+  }
+
+  test("gauge page writes each family's HELP and TYPE once") {
+    val page = MetricsJob.prometheus(AggMetrics(3L, 2L, 2L, Seq(
+      PublisherCounts("http://a", 2L, 1L),
+      PublisherCounts("http://b", 1L, 1L))))
+    assert(page ==
+      """# HELP records_total Total number of records
+        |# TYPE records_total gauge
+        |records_total 3
+        |# HELP records_total_without_deleted Total number of records without logically deleted
+        |# TYPE records_total_without_deleted gauge
+        |records_total_without_deleted 2
+        |# HELP publishers_total Total number of publishers
+        |# TYPE publishers_total gauge
+        |publishers_total 2
+        |# HELP publisher_records Records per publisher
+        |# TYPE publisher_records gauge
+        |publisher_records{publisher="http://a"} 2
+        |publisher_records{publisher="http://b"} 1
+        |# HELP publisher_records_without_deleted Live records per publisher
+        |# TYPE publisher_records_without_deleted gauge
+        |publisher_records_without_deleted{publisher="http://a"} 1
+        |publisher_records_without_deleted{publisher="http://b"} 1
+        |""".stripMargin)
+    // no publishers: the per-publisher families are left out entirely
+    assert(!MetricsJob.prometheus(AggMetrics(0L, 0L, 0L, Nil))
+      .contains("publisher_records"))
   }
 
   test("a crashed verb still counts as a failed request") {
