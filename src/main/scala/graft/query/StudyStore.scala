@@ -104,24 +104,15 @@ trait HarvestStore {
       tokenArgs: Map[String, String] = Map.empty): Page
 }
 
-/** The engine's DocStore: query_single / query_multiple / query_distinct /
-  * query_count over the studies DataFrame (SURVEY.md §2.1 Q1-Q4), with
-  * keyset pagination. All methods take a [[Filter]] AST so predicates
-  * arrive at Catalyst as one conjunction.
+/** The engine's DocStore over the studies DataFrame: multi-predicate
+  * flags and keyset-paged lists (SURVEY.md §2.1 Q2, Q12). Point lookups
+  * and set enumeration build their own plans on [[studies]]. All methods
+  * take a [[Filter]] AST so predicates arrive at Catalyst as one
+  * conjunction.
   */
 final class StudyStore(val studies: DataFrame) extends HarvestStore {
 
   private val Key = "_aggregator_identifier"
-
-  /** Q1: point lookup. */
-  def querySingle(filter: Filter, fields: Seq[String]): Option[Row] =
-    studies.filter(filter.toColumn)
-      .select(fields.distinct.map(col): _*)
-      .limit(1).collect().headOption
-
-  /** Q4: count. */
-  def queryCount(filter: Filter): Long =
-    studies.filter(filter.toColumn).count()
 
   /** Evaluate several predicates over the rows matching `filter` in ONE
     * scan: returns None when nothing matches, otherwise the names whose
@@ -141,14 +132,6 @@ final class StudyStore(val studies: DataFrame) extends HarvestStore {
       case (name, i) if row.getInt(i + 1) == 1 => name
     })
   }
-
-  /** Q3: distinct values of a (possibly nested) scalar field. */
-  def queryDistinct(field: String, filter: Filter = True): Seq[String] =
-    studies.filter(filter.toColumn)
-      .select(col(field).cast("string").as("v"))
-      .where(col("v").isNotNull)
-      .distinct().orderBy("v")
-      .collect().map(_.getString(0)).toSeq
 
   /** Q2 + Q12: filtered, projected scan, paged by keyset cursor.
     *

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Delta-bounded CDC apply: mirror a change-feed-enabled [[TxTable]]
   * into a replica with per-version work proportional to the CHANGE
@@ -68,11 +70,13 @@ object TxReplicate {
     // up the PLAN before any data is read while pushdown has long
     // given up — the mask switches to [[TxTable.deleteKeys]]'s
     // broadcast semi-join (plan stays O(1), keys ship once per
-    // executor). The collect stays a single full pass, bounded by the
-    // change batch (the pre-existing contract): a `limit(n).collect()`
-    // would route through the incremental-take executor, which
-    // re-runs the typed-changes subtree per size escalation — measured
-    // 4 s → 20 s on the replicate gate before this was caught.
+    // executor). The collect is the only pass over the typed changes,
+    // bounded by the change batch: the semi-join side is rebuilt from
+    // the collected keys, so neither the mask nor a `deleteImpl` retry
+    // re-runs the typed-changes subtree. A `limit(n).collect()` would
+    // route through the incremental-take executor, which re-runs that
+    // subtree per size escalation — measured 4 s → 20 s on the
+    // replicate gate before this was caught.
     val maxInline = spark.conf
       .getOption("spark.graft.replicate.maxInlineDeleteKeys")
       .map(_.toInt).getOrElse(10000)
@@ -88,7 +92,8 @@ object TxReplicate {
       if (gone.size <= maxInline)
         TxTable.deleteWhere(spark, root, col(keyCol).isInCollection(gone))
       else
-        TxTable.deleteKeys(spark, root, keyCol, goneDf)
+        TxTable.deleteKeys(spark, root, keyCol, spark.createDataFrame(
+          gone.map(Row(_)).asJava, goneDf.schema))
       commits += 1
     }
     // always runs (even with zero add rows): the high-water header

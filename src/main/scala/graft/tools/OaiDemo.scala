@@ -76,12 +76,12 @@ object OaiDemo {
       case Some("metrics") =>
         println(MetricsJob.prometheus(MetricsJob.run(studies)))
       case Some("layout") =>
-        // ingest-layout drive: derive _direct_base_url, write hash-
-        // distributed + updated-sorted parquet, reread, run metrics
+        // ingest-layout drive: derive _direct_base_url, write id-range-
+        // partitioned, id-sorted parquet sized from the data, reread, run
+        // metrics
         val dir = java.nio.file.Files.createTempDirectory("graft-layout")
           .toString + "/studies"
-        graft.ingest.StudyLayout.write(
-          studies.drop("_direct_base_url"), dir, numFiles = 4)
+        graft.ingest.StudyLayout.write(studies.drop("_direct_base_url"), dir)
         val back = spark.read.parquet(dir)
         println(s"layout written to $dir; rows=${back.count()}")
         println(MetricsJob.prometheus(MetricsJob.run(back)).linesIterator
