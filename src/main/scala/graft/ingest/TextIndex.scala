@@ -88,16 +88,9 @@ object TextIndex {
     * manifest the batch publishes file by file, so a concurrent probe
     * can observe a partial batch and a concurrent append races the
     * `_stats` read-modify-write.
-    *
-    * Deprecated in favor of the TRANSACTIONAL stack: pin the index to
-    * a [[graft.sources.TxTable]] via `buildBm25Index` — appends to the
-    * table then maintain the postings AND the df/N/avgdl moments
-    * atomically in the same commit, probes always see one snapshot,
-    * and `deleteWhere` masks postings instead of leaving them stale.
-    * This standalone layout remains for manifest-less corpora only.
+    * The caller keeps that contract: serialize every append and probe
+    * on one `path` outside this call.
     */
-  @deprecated("pin the index to a TxTable (buildBm25Index) — the " +
-    "standalone layout publishes non-atomically", "round-16")
   def appendBm25(
       docs: DataFrame, idCol: String, textCol: String,
       path: String, termBuckets: Int = 64): Long = {
@@ -218,15 +211,9 @@ object TextIndex {
     * APPEND gets the other writer's files attributed to its returned
     * count (the before/after directory diff below is not atomic on
     * object stores), and nothing detects either.
-    *
-    * Deprecated in favor of the TRANSACTIONAL stack: pin the index to
-    * a [[graft.sources.TxTable]] via `buildPhraseIndex` — table
-    * appends maintain the positions atomically in the same commit and
-    * probes always see one snapshot. This standalone layout remains
-    * for manifest-less corpora only.
+    * The caller keeps that contract: serialize every append and probe
+    * on one `path` outside this call.
     */
-  @deprecated("pin the index to a TxTable (buildPhraseIndex) — the " +
-    "standalone layout publishes non-atomically", "round-16")
   def appendPositions(
       docs: DataFrame, idCol: String, textCol: String,
       path: String, termBuckets: Int = 64): Long = {

@@ -341,6 +341,23 @@ object Dedup {
       .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
   }
 
+  /** Cluster key of a sorted token-hash set: each hash is folded
+    * through XXH64 with the running key as its seed. A linear fold
+    * (`k * 31 + h`) maps distinct sets to one key — `[1, 2]` and
+    * `[0, 33]` both give `seed * 961 + 33` — and would merge their
+    * clusters into false J = 1 pairs.
+    */
+  private[graft] def tokenSetKey(sortedHashes: Array[Long]): Long = {
+    var k = 1125899906842597L
+    var j = 0
+    while (j < sortedHashes.length) {
+      k = org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashLong(sortedHashes(j), k)
+      j += 1
+    }
+    k
+  }
+
   private[graft] def shingleStrings(text: String, n: Int): Array[String] = {
     val w = text.toLowerCase.trim.split("\\s+")
     if (w.length < n) Array(w.mkString(" "))
@@ -733,10 +750,7 @@ object Dedup {
           // deterministic cluster identity from the content itself — NOT
           // a member id, which is ambiguous when one id appears with two
           // texts (internal key: never leaves the query)
-          var ck = 1125899906842597L
-          var j = 0
-          while (j < hs.length) { ck = ck * 31 + hs(j); j += 1 }
-          (id, ck, hs)
+          (id, tokenSetKey(hs), hs)
         }
       }
       .toDF("id", "ckey", "hs")

@@ -79,65 +79,6 @@ object HybridSearch {
     * whole point at 100 TB: retrieval cost is index-probe-bounded,
     * not corpus-bounded.
     */
-  /** [[rrfFusionIndexed]] served from ONE transactional snapshot: both
-    * pools probe indexes PINNED to the same [[graft.sources.TxTable]]
-    * version — the BM25 postings+moments and the IVF cells published
-    * by the same manifest renames as the corpus they index. This
-    * closes the last skew the standalone layouts allow (corpus and
-    * index versions advancing independently between probes, or a
-    * lexical pool ranking docs a `deleteWhere` already removed): the
-    * version is resolved ONCE here and handed to both probes, so the
-    * fused result is a pure function of (table version, query).
-    * `version < 0` means latest. Same fusion arithmetic as
-    * [[rrfFusion]]; with `nProbes` = the index's centroid count the
-    * result is exact.
-    */
-  def rrfFusionTxPinned(
-      spark: org.apache.spark.sql.SparkSession, root: String,
-      textIndex: String, annIndex: String,
-      terms: Seq[String], queryVec: Array[Double], excludeId: Long,
-      k: Int, poolSize: Int = 100, rrfK: Int = 60, nProbes: Int = 16,
-      version: Long = -1L): DataFrame = {
-    import graft.sources.TxTable
-    val v =
-      if (version >= 0L) version
-      else TxTable.latestSnapshot(spark, root).version
-    // excludeId masks only the VECTOR pool (the query vector's own
-    // row), matching [[rrfFusionIndexed]] — the lexical pool has no
-    // self-match notion. Both probes surface their index's id column
-    // FIRST; resolve it positionally so the caller's column naming is
-    // free.
-    val lexScored = TxTable
-      .bm25ProbeIndexed(spark, root, textIndex, terms, version = v)
-    val lexPool = lexScored
-      .select(col(lexScored.columns.head).cast("long").as("_lex_id"),
-        round(col("bm25"), 4).as("_lex_score"))
-      .orderBy(col("_lex_score").desc, col("_lex_id"))
-      .limit(poolSize)
-    val lex = lexPool.withColumn("lex_rank",
-      row_number().over(
-        Window.orderBy(col("_lex_score").desc, col("_lex_id"))))
-    val vecScored = TxTable
-      .ivfProbeIndexed(spark, root, annIndex, queryVec, k = poolSize,
-        nProbes = nProbes, excludeId = Some(excludeId), version = v)
-    val vecPool = vecScored
-      .select(col(vecScored.columns.head).cast("long").as("_vec_id"),
-        col("sim"))
-    val vec = vecPool.withColumn("vec_rank",
-      row_number().over(Window.orderBy(col("sim").desc, col("_vec_id"))))
-    lex.join(vec, col("_lex_id") === col("_vec_id"), "full_outer")
-      .select(
-        coalesce(col("_lex_id"), col("_vec_id")).as("doc_id"),
-        (coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)))
-          .as("_rrf"),
-        col("lex_rank"), col("vec_rank"))
-      .orderBy(round(col("_rrf"), 6).desc, col("doc_id"))
-      .limit(k)
-      .select(col("doc_id"), round(col("_rrf"), 6).as("rrf"),
-        col("lex_rank"), col("vec_rank"))
-  }
-
   def rrfFusionIndexed(
       spark: org.apache.spark.sql.SparkSession,
       textIndexPath: String, annIndexPath: String,

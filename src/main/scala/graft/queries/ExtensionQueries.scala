@@ -1188,96 +1188,6 @@ object SimilarityQueries extends QueryGroup {
     * in-plan composition while touching index-probe bytes, not the
     * corpus.
     */
-  /** [[graft.operators.HybridSearch.rrfFusionTxPinned]]: the fused
-    * retrieval stack served from ONE transactional snapshot — BM25
-    * postings+moments AND IVF cells pinned to the same
-    * [[graft.sources.TxTable]] version, with a `deleteWhere` BETWEEN
-    * build and probe: deleted docs must vanish from BOTH pools (idxdv
-    * masks, BM25 moments decrement) and every survivor's lexical score
-    * must re-weight by the live-corpus stats. The version is resolved
-    * once and handed to both probes, so the corpus/index skew the
-    * standalone layouts allow is structurally impossible. Full oracle:
-    * both pools, both rank windows, and the fusion replayed over the
-    * survivor set.
-    */
-  val hybridTxPinned: QueryDef = QueryDef(
-    "sim_hybrid_txpinned",
-    (s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text")
-      val emb = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      val corpus = docs.join(emb, col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-hybpin-").toString
-      // corpus + both pinned indexes in ONE v0 commit (createIndexed,
-      // round 17): equivalent by construction to the create →
-      // buildBm25Index → buildIvfIndex chain this replaces, minus two
-      // commits and two corpus re-reads; the deleteWhere BETWEEN build
-      // and probe — the semantics this gate exists to pin — stays its
-      // own commit
-      graft.sources.TxTable.createIndexed(corpus, root, Seq(
-        graft.sources.TxTable.Bm25IndexBuild("lex", "doc_id", "text"),
-        graft.sources.TxTable.IvfIndexBuild("vec", "doc_id",
-          "embedding", numCentroids = 16)))
-      graft.sources.TxTable.deleteWhere(s, root, col("doc_id") % 9 === 4)
-      val qv = graft.ingest.AnnIndex.lookupVector(
-        Tables(s, dir).embeddings, "vec_id", "embedding", 0L)
-      graft.operators.HybridSearch.rrfFusionTxPinned(s, root, "lex", "vec",
-        Seq("spark", "vector", "customer"), qv, excludeId = 0L, k = 20,
-        nProbes = 16)
-    },
-    Some(
-      """WITH pd AS (
-        |  SELECT doc_id, len(ws) AS dl,
-        |    len(list_filter(ws, w -> w = 'spark')) AS tf0,
-        |    len(list_filter(ws, w -> w = 'vector')) AS tf1,
-        |    len(list_filter(ws, w -> w = 'customer')) AS tf2
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(lower(trim(text)), '\s+') AS ws
-        |        FROM documents
-        |        WHERE doc_id IN (SELECT vec_id FROM embeddings)
-        |          AND doc_id % 9 <> 4)),
-        |st AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-        |         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-        |         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-        |         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-        |       FROM pd),
-        |scored AS (SELECT doc_id, round(
-        |    (CASE WHEN tf0 > 0 THEN ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-        |      * tf0::DOUBLE * (1.2 + 1.0) / (tf0::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf1 > 0 THEN ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-        |      * tf1::DOUBLE * (1.2 + 1.0) / (tf1::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf2 > 0 THEN ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-        |      * tf2::DOUBLE * (1.2 + 1.0) / (tf2::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END),
-        |  4) AS bm25r
-        |  FROM pd CROSS JOIN st
-        |  WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0),
-        |lexpool AS (SELECT doc_id, bm25r FROM scored
-        |            ORDER BY bm25r DESC, doc_id LIMIT 100),
-        |lex AS (SELECT doc_id,
-        |          row_number() OVER (ORDER BY bm25r DESC, doc_id) AS lex_rank
-        |        FROM lexpool),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |      FROM embeddings WHERE vec_id % 9 <> 4),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-        |      WHERE vec_id = 0),
-        |vpool AS (SELECT vec_id, round(list_cosine_similarity(e.v, q.qv), 6) + 0 AS sim
-        |          FROM e, q WHERE e.vec_id <> 0
-        |          ORDER BY sim DESC, vec_id LIMIT 100),
-        |vec AS (SELECT vec_id,
-        |          row_number() OVER (ORDER BY sim DESC, vec_id) AS vec_rank
-        |        FROM vpool),
-        |f AS (SELECT coalesce(l.doc_id, v.vec_id) AS doc_id,
-        |        coalesce(CAST(1 AS DOUBLE) / (60 + lex_rank), 0)
-        |          + coalesce(CAST(1 AS DOUBLE) / (60 + vec_rank), 0) AS rrf,
-        |        lex_rank, vec_rank
-        |      FROM lex l FULL JOIN vec v ON l.doc_id = v.vec_id)
-        |SELECT doc_id, round(rrf, 6) AS rrf, lex_rank, vec_rank
-        |FROM f ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin))
-
   val hybridIndexed: QueryDef = QueryDef(
     "sim_hybrid_indexed",
     (s, dir) => {
@@ -1859,64 +1769,6 @@ object SimilarityQueries extends QueryGroup {
     },
     None)
 
-  /** Exact-equivalence gate for the TRANSACTIONALLY PINNED IVF probe
-    * ([[graft.sources.TxTable.ivfProbeIndexed]]): the corpus becomes a
-    * TxTable whose manifest pins an IVF index (one commit covers both
-    * — see [[graft.sources.TxTable.buildIvfIndex]]); probing all cells
-    * makes file skipping irrelevant to the ANSWER, so the result must
-    * equal brute-force cosine top-k bit for bit. TxIndexSpec pins the
-    * scan-shrinkage side (pruned file list a strict subset) and the
-    * both-or-neither versioning.
-    */
-  /** DV delete on an INDEXED table ([[graft.sources.TxTable
-    * .deleteWhere]]'s per-index deletion-vector channel, VERDICT r13
-    * #2): the delete commit publishes corpus positions AND the pinned
-    * index's deleted ids in ONE manifest rename, and the probe
-    * anti-joins those ids — so probing ALL cells after the delete
-    * must equal brute-force top-k over the SURVIVING corpus bit for
-    * bit. TxIndexSpec pins the both-or-neither versioning and that
-    * the data/index files themselves are untouched.
-    */
-  val txDeleteDvIndexed: QueryDef = QueryDef(
-    "io_tx_delete_dv_indexed",
-    (s, dir) => {
-      val emb = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txidxdv-").toString
-      graft.sources.TxTable.create(emb, root)
-      graft.sources.TxTable.buildIvfIndex(s, root, "emb",
-        "vec_id", "embedding", numCentroids = 4, buckets = 4)
-      graft.sources.TxTable.deleteWhere(s, root, col("vec_id") % 7 === 3)
-      graft.sources.TxTable.ivfProbeIndexed(s, root, "emb",
-        AnnIndex.lookupVector(emb, "vec_id", "embedding", 0L),
-        k = 10, nProbes = 4, excludeId = Some(0L))
-    },
-    Some(
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id % 7 <> 3),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  WHERE vec_id = 0)
-        |SELECT e.vec_id, round(list_cosine_similarity(e.v, q.v), 6) + 0 AS sim
-        |FROM e, q WHERE e.vec_id <> 0
-        |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin))
-
-  val txPinnedProbeExact: QueryDef = QueryDef(
-    "sim_ann_txpinned_exact",
-    (s, dir) => {
-      val emb = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txidx-probe-").toString
-      // one v0 commit for corpus + pinned index (createIndexed, r17):
-      // the build chain is setup, not the probed semantics
-      graft.sources.TxTable.createIndexed(emb, root, Seq(
-        graft.sources.TxTable.IvfIndexBuild("emb", "vec_id",
-          "embedding", numCentroids = 4)), buckets = 4)
-      graft.sources.TxTable.ivfProbeIndexed(s, root, "emb",
-        AnnIndex.lookupVector(emb, "vec_id", "embedding", 0L),
-        k = 10, nProbes = 4, excludeId = Some(0L))
-    },
-    Some(bruteForceTop10Sql))
-
   def defs: Seq[QueryDef] =
     Seq(topK, topKBatch, annLsh, annIvf, annLshMultiProbe, annIvfBatch,
       annIvfExact, annLshExact, annIvfBatchExact, annLshMultiProbeExact,
@@ -1926,11 +1778,10 @@ object SimilarityQueries extends QueryGroup {
       centroidAssign, annIvfPq, kmeansLloyd, hybridRrf, hybridIndexed,
       quantizeInt8,
       clusterNmi, pcaPower, matryoshkaTopK, featureScale, rankCorrelation,
-      mutualNearest, mutualNearestBlocked, hybridTxPinned, quantileBinsGate,
+      mutualNearest, mutualNearestBlocked, quantileBinsGate,
       rankNormalizeGate, hardNegatives,
       classSeparationGate, kCenterGate, mmrGate, maxSimGate,
-      maxSimPruned, maxSimPrunedExact, maxSimIndexed, txPinnedProbeExact,
-      txDeleteDvIndexed)
+      maxSimPruned, maxSimPrunedExact, maxSimIndexed)
 }
 
 /** End-to-end curation: the composition a training-data pipeline
@@ -3947,170 +3798,6 @@ object TextQueries extends QueryGroup {
         |WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0
         |ORDER BY doc_id""".stripMargin))
 
-  /** BM25 against the TX-PINNED inverted index ([[graft.sources
-    * .TxTable.buildBm25Index]] → `bm25ProbeIndexed`): corpus,
-    * term-bucket postings, AND the (n_docs, Σdl) stats publish by ONE
-    * manifest rename — the standalone layout's corpus/index skew
-    * (round-14 verdict gap #2) is structurally impossible. Same
-    * oracle as `text_bm25`: the hash proves the pinned probe is
-    * row-identical to the in-plan scorer on the live table.
-    * Structural gate: table + index build in-gate.
-    */
-  val bm25TxPinned: QueryDef = QueryDef(
-    "text_bm25_txpinned",
-    (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bm25pin-").toString
-      graft.sources.TxTable.createIndexed(
-        Tables(s, dir).documents.select("doc_id", "text"), root, Seq(
-          graft.sources.TxTable.Bm25IndexBuild("txt", "doc_id", "text")))
-      graft.sources.TxTable.bm25ProbeIndexed(s, root, "txt",
-          Seq("spark", "vector", "customer"))
-        .select(col("doc_id"), round(col("bm25"), 4).as("bm25"))
-        .orderBy("doc_id")
-    },
-    Some(
-      """WITH pd AS (
-        |  SELECT doc_id, len(ws) AS dl,
-        |    len(list_filter(ws, w -> w = 'spark')) AS tf0,
-        |    len(list_filter(ws, w -> w = 'vector')) AS tf1,
-        |    len(list_filter(ws, w -> w = 'customer')) AS tf2
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(lower(trim(text)), '\s+') AS ws
-        |        FROM documents)),
-        |st AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-        |         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-        |         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-        |         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-        |       FROM pd)
-        |SELECT doc_id, round(
-        |    (CASE WHEN tf0 > 0 THEN ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-        |      * tf0::DOUBLE * (1.2 + 1.0) / (tf0::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf1 > 0 THEN ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-        |      * tf1::DOUBLE * (1.2 + 1.0) / (tf1::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf2 > 0 THEN ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-        |      * tf2::DOUBLE * (1.2 + 1.0) / (tf2::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END),
-        |  4) AS bm25
-        |FROM pd CROSS JOIN st
-        |WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0
-        |ORDER BY doc_id""".stripMargin))
-
-  /** [[bm25TxPinned]] with a MID-LIFE `deleteWhere`: the delete's one
-    * commit masks the deleted docs' postings (`idxdv/` anti-join) AND
-    * decrements the header's exact (n_docs, Σdl) moments, so the probe
-    * serves BM25 over exactly the survivors — deleted docs drop out of
-    * results and every survivor's score re-weights by the live-corpus
-    * stats. Oracle: the `text_bm25` SQL over the survivor set, stats
-    * included (df/N/avgdl all over `doc_id % 7 <> 3`).
-    */
-  val bm25TxPinnedDelete: QueryDef = QueryDef(
-    "text_bm25_txpinned_delete",
-    (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bm25pindel-").toString
-      graft.sources.TxTable.createIndexed(
-        Tables(s, dir).documents.select("doc_id", "text"), root, Seq(
-          graft.sources.TxTable.Bm25IndexBuild("txt", "doc_id", "text")))
-      graft.sources.TxTable.deleteWhere(s, root, col("doc_id") % 7 === 3)
-      graft.sources.TxTable.bm25ProbeIndexed(s, root, "txt",
-          Seq("spark", "vector", "customer"))
-        .select(col("doc_id"), round(col("bm25"), 4).as("bm25"))
-        .orderBy("doc_id")
-    },
-    Some(
-      """WITH pd AS (
-        |  SELECT doc_id, len(ws) AS dl,
-        |    len(list_filter(ws, w -> w = 'spark')) AS tf0,
-        |    len(list_filter(ws, w -> w = 'vector')) AS tf1,
-        |    len(list_filter(ws, w -> w = 'customer')) AS tf2
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(lower(trim(text)), '\s+') AS ws
-        |        FROM documents WHERE doc_id % 7 <> 3)),
-        |st AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-        |         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-        |         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-        |         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-        |       FROM pd)
-        |SELECT doc_id, round(
-        |    (CASE WHEN tf0 > 0 THEN ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-        |      * tf0::DOUBLE * (1.2 + 1.0) / (tf0::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf1 > 0 THEN ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-        |      * tf1::DOUBLE * (1.2 + 1.0) / (tf1::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END)
-        |  + (CASE WHEN tf2 > 0 THEN ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-        |      * tf2::DOUBLE * (1.2 + 1.0) / (tf2::DOUBLE
-        |        + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / avgdl)) ELSE 0 END),
-        |  4) AS bm25
-        |FROM pd CROSS JOIN st
-        |WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0
-        |ORDER BY doc_id""".stripMargin))
-
-  /** Phrase retrieval against the TX-PINNED positional index
-    * ([[graft.sources.TxTable.buildPhraseIndex]] →
-    * `phraseProbeIndexed`), with a `deleteWhere` between build and
-    * probe: the deleted docs' occurrences stop matching in the SAME
-    * commit (idxdv anti-join) — the third index kind under the
-    * one-manifest pin. Full oracle: adjacency replayed by 1-based
-    * list indexing over the survivor set.
-    */
-  val phraseTxPinned: QueryDef = QueryDef(
-    "text_index_phrase_txpinned",
-    (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-pospin-").toString
-      graft.sources.TxTable.createIndexed(
-        Tables(s, dir).documents.select("doc_id", "text"), root, Seq(
-          graft.sources.TxTable.PhraseIndexBuild("pos", "doc_id", "text")))
-      graft.sources.TxTable.deleteWhere(s, root, col("doc_id") % 6 === 2)
-      graft.sources.TxTable.phraseProbeIndexed(s, root, "pos",
-          Seq("spark", "vector"))
-        .orderBy("doc_id")
-    },
-    Some(
-      """WITH lst AS (SELECT doc_id,
-        |    string_split_regex(lower(trim(text)), '\s+') AS l
-        |  FROM documents WHERE doc_id % 6 <> 2),
-        |m AS (SELECT doc_id FROM lst, unnest(range(1, len(l))) t(i)
-        |      WHERE l[i] = 'spark' AND l[i+1] = 'vector')
-        |SELECT doc_id, count(*)::BIGINT AS n_matches
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin))
-
-  /** Conjunctive (AND) retrieval against the TX-PINNED BM25 postings
-    * ([[graft.sources.TxTable.conjunctiveProbeIndexed]]) with a
-    * mid-life delete — the boolean face of the pinned lexical index
-    * shares its layout with the ranked one. Full oracle over the
-    * survivor set.
-    */
-  val conjunctiveTxPinned: QueryDef = QueryDef(
-    "text_index_conjunctive_txpinned",
-    (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-conjpin-").toString
-      graft.sources.TxTable.createIndexed(
-        Tables(s, dir).documents.select("doc_id", "text"), root, Seq(
-          graft.sources.TxTable.Bm25IndexBuild("lex", "doc_id", "text")))
-      graft.sources.TxTable.deleteWhere(s, root, col("doc_id") % 6 === 2)
-      graft.sources.TxTable.conjunctiveProbeIndexed(s, root, "lex",
-          Seq("spark", "vector", "customer"))
-        .orderBy("doc_id")
-    },
-    Some(
-      """WITH pd AS (
-        |  SELECT doc_id,
-        |    len(list_filter(ws, w -> w = 'spark')) AS tf0,
-        |    len(list_filter(ws, w -> w = 'vector')) AS tf1,
-        |    len(list_filter(ws, w -> w = 'customer')) AS tf2
-        |  FROM (SELECT doc_id,
-        |          string_split_regex(lower(trim(text)), '\s+') AS ws
-        |        FROM documents WHERE doc_id % 6 <> 2))
-        |SELECT doc_id, (tf0 + tf1 + tf2)::BIGINT AS tf_total
-        |FROM pd WHERE tf0 > 0 AND tf1 > 0 AND tf2 > 0
-        |ORDER BY doc_id""".stripMargin))
-
   private val positionalIndexes =
     new graft.operators.LruCache[String, String](8)
 
@@ -4156,7 +3843,6 @@ object TextQueries extends QueryGroup {
     * SQL, so the gate proves build-half + append-half ≡ one-shot
     * build, row for row.
     */
-  @annotation.nowarn("cat=deprecation") // gate keeps the legacy path honest
   val indexPhraseAppend: QueryDef = QueryDef(
     "text_index_phrase_append",
     (s, dir) => {
@@ -4263,7 +3949,6 @@ object TextQueries extends QueryGroup {
     * corpus (the [[graft.ingest.AnnIndex.appendIvf]] maintenance
     * contract applied to lexical retrieval).
     */
-  @annotation.nowarn("cat=deprecation") // gate keeps the legacy path honest
   val bm25IndexAppend: QueryDef = QueryDef(
     "text_bm25_index_append",
     (s, dir) => {
@@ -5415,9 +5100,7 @@ object TextQueries extends QueryGroup {
   def defs: Seq[QueryDef] =
     Seq(tokens, quality, langId, fingerprint, bigramFreq, rarityTerms,
       repetition, redaction, unigramLogProb, gopherRules, bm25,
-      bm25Indexed, bm25TxPinned, bm25TxPinnedDelete, phraseTxPinned,
-      conjunctiveTxPinned,
-      bm25IndexAppend, indexPhrase, indexPhraseAppend,
+      bm25Indexed, bm25IndexAppend, indexPhrase, indexPhraseAppend,
       indexConjunctive, bm25BatchIndexed, bpeEncode,
       bigramLogProb, pmi, winnow, jsDivergence, jaroWinkler, zipf,
       kneserNey, blocklist, compressionRatio, redundancyRatio,
@@ -8797,82 +8480,6 @@ object IoQueries extends QueryGroup {
         |  CASE WHEN doc_id % 2 = 0 THEN NULL ELSE n_chars END AS n_chars
         |FROM documents ORDER BY doc_id""".stripMargin))
 
-  /** Atomic corpus+index publish ([[graft.sources.TxTable.buildIvfIndex]]
-    * + index-maintaining [[graft.sources.TxTable.append]]): v1 pins an
-    * IVF index to the even embeddings, v2 appends the odds — corpus
-    * delta and routed index delta in ONE manifest rename. The gate
-    * reads BOTH sides at BOTH versions and counts set differences; the
-    * oracle says every version's index row set IS its corpus row set
-    * (both-or-neither — no instant pairs corpus v with index v-1).
-    */
-  val txIndexPinned: QueryDef = QueryDef(
-    "io_tx_index_pinned",
-    (s, dir) => {
-      val e = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txidx-pin-").toString
-      graft.sources.TxTable.create(e.filter(col("vec_id") % 2 === 0), root)
-      graft.sources.TxTable.buildIvfIndex(s, root, "emb",
-        "vec_id", "embedding", numCentroids = 4, buckets = 4)
-      graft.sources.TxTable.append(e.filter(col("vec_id") % 2 === 1), root)
-      import s.implicits._
-      (1L to 2L).map { v =>
-        val c = graft.sources.TxTable.readVersion(s, root, v).select("vec_id")
-        val i = graft.sources.TxTable
-          .readIndexVersion(s, root, "emb", v).select("vec_id")
-        (v, c.count(), i.count(), c.except(i).count(), i.except(c).count())
-      }.toDF("version", "corpus_rows", "index_rows",
-          "only_corpus", "only_index")
-        .orderBy("version")
-    },
-    Some(
-      """SELECT 1::BIGINT AS version, count(*)::BIGINT AS corpus_rows,
-        |  count(*)::BIGINT AS index_rows, 0::BIGINT AS only_corpus,
-        |  0::BIGINT AS only_index
-        |FROM embeddings WHERE vec_id % 2 = 0
-        |UNION ALL
-        |SELECT 2, count(*), count(*), 0, 0 FROM embeddings
-        |ORDER BY version""".stripMargin))
-
-  /** Transactional MERGE over an indexed corpus
-    * ([[graft.sources.TxTable.mergeInto]] with a pinned index): the
-    * merge upserts every %3 id with a shifted vector and tombstones
-    * the %15 ids, and the SAME commit rebuilds the index from the
-    * merged result. The gate full-outer-joins corpus ids against index
-    * ids at the merged version; the oracle is the closed-form merge
-    * survivor set with both membership flags 1 — a stale index (any
-    * surviving tombstone, any missed upsert) breaks the hash.
-    */
-  val txMergeIndexAtomic: QueryDef = QueryDef(
-    "io_tx_merge_index_atomic",
-    (s, dir) => {
-      val e = Tables(s, dir).embeddings.select("vec_id", "embedding")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txidx-merge-").toString
-      graft.sources.TxTable.create(e, root)
-      graft.sources.TxTable.buildIvfIndex(s, root, "emb",
-        "vec_id", "embedding", numCentroids = 4, buckets = 4)
-      val src = e.filter(col("vec_id") % 3 === 0)
-        .withColumn("embedding",
-          transform(col("embedding"), x => x + lit(1.0f)))
-        .withColumn("_del", col("vec_id") % 5 === 0)
-      graft.sources.TxTable.mergeInto(root, src,
-        "vec_id", Seq("embedding"), "_del")
-      val c = graft.sources.TxTable.read(s, root)
-        .select(col("vec_id"), lit(1).as("in_corpus"))
-      val i = graft.sources.TxTable.readIndex(s, root, "emb")
-        .select(col("vec_id"), lit(1).as("in_index"))
-      c.join(i, Seq("vec_id"), "full_outer")
-        .select(col("vec_id"),
-          coalesce(col("in_corpus"), lit(0)).as("in_corpus"),
-          coalesce(col("in_index"), lit(0)).as("in_index"))
-        .orderBy("vec_id")
-    },
-    Some(
-      """SELECT vec_id, 1 AS in_corpus, 1 AS in_index FROM embeddings
-        |WHERE NOT (vec_id % 3 = 0 AND vec_id % 5 = 0)
-        |ORDER BY vec_id""".stripMargin))
-
   def defs: Seq[QueryDef] =
     Seq(jsonlRoundTrip, csvRoundTrip, warcExtract, warcHttpExtract,
       urlCanonicalize, urlFrontier, zorderValues, orcRoundTrip,
@@ -8887,7 +8494,6 @@ object IoQueries extends QueryGroup {
       txCdcReplicate, txCdcReplicateDv, txMirrorVacuumResume,
       txSnapshotHarvest,
       profileDrift,
-      txIndexPinned, txMergeIndexAtomic,
       merkleDigestGate, merkleChangedGate, keySkewGate, merkleWindowGate,
       schemaEvolution)
 }

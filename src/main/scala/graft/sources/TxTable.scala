@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   * Layout:
   * {{{
   *   root/data/<uuid>/part-*.parquet   -- immutable, write-once
+  *   root/dv/<uuid>/part-*.parquet     -- deletion-vector positions
+  *   root/cdc/<uuid>/part-*.parquet    -- change-feed merge events
   *   root/_txlog/<%020d>.txn           -- one manifest per version
   * }}}
   *
@@ -79,19 +81,16 @@ object TxTable {
   /** One resolved version: `files` are root-relative paths, `stats`
     * maps a file to (min, max) per cluster column where recorded (one
     * pair per declared cluster column, in declaration order),
-    * `headers` carries the table metadata (`cluster`, `stream:<id>`,
-    * `index:<name>`), `indexFiles` the root-relative data files of
-    * each DERIVED INDEX pinned to this version (see [[buildIvfIndex]]
-    * — corpus and index are published by ONE manifest rename, so a
-    * reader of any version sees them both-or-neither).
+    * `headers` carries the table metadata (`cluster`, `schema`,
+    * `check`, `cdc`, `stream:<id>`), `dvFiles` the deletion-vector
+    * position files of [[deleteWhere]] commits, and `cdcFiles` the
+    * change files THIS version's change-feed [[mergeInto]] wrote.
     */
   final case class Snapshot(
       version: Long, files: Seq[String],
       stats: Map[String, Seq[(Long, Long)]],
       headers: Map[String, String],
-      indexFiles: Map[String, Seq[String]] = Map.empty,
       dvFiles: Seq[String] = Seq.empty,
-      indexDvFiles: Map[String, Seq[String]] = Map.empty,
       cdcFiles: Seq[String] = Seq.empty) {
     /** Declared cluster columns: empty (unclustered), one (range
       * clustering), or two (z-order clustering — both columns carry
@@ -181,35 +180,25 @@ object TxTable {
     require(lines.headOption.contains(s"version=$version"),
       s"manifest $p does not declare version=$version")
     // file entries start with an immutable namespace prefix (`data/`
-    // for corpus files, `index/<name>/` for pinned derived-index
-    // files); anything else after the version line is a key=value
-    // header — routed by PREFIX, never by '=' (index paths may carry
-    // `cell=K`-style segments from partitioned layouts)
+    // for corpus files); anything else after the version line is a
+    // key=value header — routed by PREFIX, never by '='
     val (fileLines, rest) =
       lines.drop(1).partition(_.startsWith("data/"))
-    val (indexLines, rest2) = rest.partition(_.startsWith("index/"))
     // deletion-vector namespace: position files of MERGE-ON-READ
     // deletes (see [[deleteWhere]]) — no stats, carried verbatim
-    val (dvEntryLines, rest3) = rest2.partition(_.startsWith("dv/"))
-    // per-index deletion-vector namespace: deleted-ID files that keep
-    // a pinned index consistent with a DV-deleted corpus (probes
-    // anti-join ids the way corpus reads anti-join positions)
-    val (idxDvLines, rest4) = rest3.partition(_.startsWith("idxdv/"))
+    val (dvEntryLines, rest2) = rest.partition(_.startsWith("dv/"))
     // change-data namespace: explicit row-level change files a
     // change-feed-enabled mergeInto writes beside its rewrite — listed
     // ONLY by the commit that produced them (per-version events, never
     // carried), read only by the change stream
-    val (cdcLines, headerLines) = rest4.partition(_.startsWith("cdc/"))
+    val (cdcLines, headerLines) = rest2.partition(_.startsWith("cdc/"))
     val headers = headerLines.map { l =>
       val i = l.indexOf('=')
       require(i > 0, s"malformed manifest header '$l' in $p")
       l.substring(0, i) -> l.substring(i + 1)
     }.toMap
-    val entries = (fileLines ++ indexLines).map(_.split("\t").toSeq)
-    val files = fileLines.map(_.split("\t").head)
-    val indexFiles = indexLines.map(_.split("\t").head)
-      .groupBy(_.split("/")(1))
-      .map { case (n, fs) => n -> fs.toSeq }
+    val entries = fileLines.map(_.split("\t").toSeq)
+    val files = entries.map(_.head)
     // path alone = no stats; path + 2k fields = k (min,max) pairs,
     // one per cluster column in declaration order
     val stats = entries.collect {
@@ -218,11 +207,8 @@ object TxTable {
           case Seq(mn, mx) => (mn.toLong, mx.toLong)
         }.toSeq
     }.toMap
-    Snapshot(version, files, stats, headers, indexFiles,
+    Snapshot(version, files, stats, headers,
       dvEntryLines.map(_.split("\t").head),
-      idxDvLines.map(_.split("\t").head)
-        .groupBy(_.split("/")(1))
-        .map { case (n, fs) => n -> fs.toSeq },
       cdcLines.map(_.split("\t").head))
   }
 
@@ -513,17 +499,8 @@ object TxTable {
     */
   private def writeDataFiles(
       df: DataFrame, root: String, cluster: Seq[String],
-      buckets: Int): Seq[String] =
-    writeFilesUnder(df, root, s"data/${UUID.randomUUID()}", cluster, buckets)
-
-  /** [[writeDataFiles]] with the destination namespace explicit — the
-    * same write-invisible-then-publish machinery serves both corpus
-    * files (`data/<uuid>`) and pinned index files
-    * (`index/<name>/<uuid>`).
-    */
-  private def writeFilesUnder(
-      df: DataFrame, root: String, sub: String, cluster: Seq[String],
       buckets: Int): Seq[String] = {
+    val sub = s"data/${UUID.randomUUID()}"
     val dest = new Path(root, sub)
     val toWrite = cluster match {
       case Seq()  => df
@@ -623,27 +600,12 @@ object TxTable {
       case None => f
     }
 
-  // existing stats lines must survive a commit that re-lists old
-  // files; CORPUS lines only — index lines are carried / rebuilt
-  // explicitly per operation (append carries + extends, merge and
-  // overwrite rebuild, compaction carries verbatim)
+  // existing stats lines must survive a commit that re-lists old files
   private def entryLines(s: Snapshot): Seq[String] =
     s.files.map(lineFor(s, _))
 
   /** Deletion-vector lines carried verbatim (no stats). */
   private def dvLines(s: Snapshot): Seq[String] = s.dvFiles
-
-  /** Per-index deletion-vector lines (optionally excluding one index
-    * being dropped/rebuilt), carried verbatim — they travel with the
-    * index lines they guard: carried where index lines carry
-    * (append/compact/restore), dropped where indexes rebuild
-    * (mergeInto/overwrite/buildIvfIndex's own name).
-    */
-  private def idxDvLines(
-      s: Snapshot, except: Set[String] = Set.empty): Seq[String] =
-    s.indexDvFiles.toSeq.sortBy(_._1).collect {
-      case (n, fs) if !except.contains(n) => fs
-    }.flatten
 
   /** Enforce the table's CHECK constraint (header `check=<sql expr>`)
     * on a batch of incoming rows BEFORE any file is written — SQL
@@ -878,8 +840,7 @@ object TxTable {
     * PROSPECTIVE schema — ANALYSIS ONLY, no job: a rename/drop that
     * would leave the CHECK referencing a gone column is rejected IN
     * THE SAME CALL instead of bricking every later append with an
-    * unresolved-attribute error until [[setCheckConstraint]] (the
-    * same commit-time interlock pinned indexes get).
+    * unresolved-attribute error until [[setCheckConstraint]].
     */
   private def validateCheckAgainst(
       spark: SparkSession, st: StructType,
@@ -897,17 +858,6 @@ object TxTable {
       }
     }
 
-  /** Columns a pinned index routes by — a rename/drop of one would
-    * sever the index's routing from the corpus; the caller drops or
-    * rebuilds the index first (the explicit-maintenance discipline).
-    */
-  private def indexReferencedCols(s: Snapshot): Map[String, String] =
-    indexSpecs(s).flatMap {
-      case iv: IvfSpec    => Seq(iv.idCol -> iv.name, iv.vecCol -> iv.name)
-      case bm: Bm25Spec   => Seq(bm.idCol -> bm.name, bm.textCol -> bm.name)
-      case ph: PhraseSpec => Seq(ph.idCol -> ph.name, ph.textCol -> ph.name)
-    }.toMap
-
   /** RENAME a column as a PURE METADATA COMMIT — zero data rewrites
     * (Delta's column mapping, re-derived): the declared field takes
     * the new logical name and its metadata pins the PHYSICAL name its
@@ -920,13 +870,12 @@ object TxTable {
     * this turns a rename from a table-scale rewrite into one KB-scale
     * manifest write.
     *
-    * Caller contract: a CHECK constraint or pinned index referencing
-    * the column must be dropped/updated first — BOTH are interlocked
-    * here: index references are rejected by name, and the CHECK SQL
-    * is analysis-resolved against the post-rename schema
-    * ([[validateCheckAgainst]]), so a breaking rename fails in THIS
-    * call instead of bricking later appends. Read-modify-write
-    * conflict semantics. Returns the new version.
+    * Caller contract: a CHECK constraint referencing the column must
+    * be dropped/updated first — the CHECK SQL is analysis-resolved
+    * against the post-rename schema ([[validateCheckAgainst]]), so a
+    * breaking rename fails in THIS call instead of bricking later
+    * appends. Read-modify-write conflict semantics. Returns the new
+    * version.
     */
   def renameColumn(
       spark: SparkSession, root: String, oldName: String,
@@ -944,13 +893,6 @@ object TxTable {
     require(!st.fields.zipWithIndex.exists { case (f, i) =>
       i != idx && key(f.name) == key(newName) },
       s"renameColumn at $root: column '$newName' already exists")
-    indexReferencedCols(cur).collectFirst {
-      case (c, n) if key(c) == key(oldName) => n
-    }.foreach { n =>
-      throw new IllegalArgumentException(
-        s"renameColumn at $root: column '$oldName' routes pinned index " +
-          s"'$n' — dropIndex (and rebuild under the new name) first")
-    }
     val f = st.fields(idx)
     val nf = StructField(newName, f.dataType, f.nullable,
       new MetadataBuilder()
@@ -960,8 +902,7 @@ object TxTable {
       s"renameColumn at $root ('$oldName' -> '$newName')")
     if (!tryCommit(spark, root, cur.version + 1,
         cur.headers + ("schema" -> normSchema(ns).json),
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        entryLines(cur) ++ dvLines(cur)))
       throw new CommitConflict(
         s"renameColumn at $root: snapshot v${cur.version} went stale")
     cur.version + 1
@@ -975,7 +916,7 @@ object TxTable {
     * themselves stay in the files (merge-on-read economics; a
     * [[compact]]/[[recluster]] rewrite physically sheds them, since
     * the rewrite projects the declared schema). Same caller contract
-    * as [[renameColumn]] for indexes and CHECK constraints; cluster
+    * as [[renameColumn]] for CHECK constraints; cluster
     * columns are additionally rejected (file stats and range reads
     * key on them — [[recluster]] away first). Returns the new version.
     */
@@ -989,13 +930,6 @@ object TxTable {
     require(idx >= 0, s"dropColumn at $root: no column '$name'")
     require(st.fields.length > 1,
       s"dropColumn at $root: cannot drop the last column")
-    indexReferencedCols(cur).collectFirst {
-      case (c, n) if key(c) == key(name) => n
-    }.foreach { n =>
-      throw new IllegalArgumentException(
-        s"dropColumn at $root: column '$name' routes pinned index " +
-          s"'$n' — dropIndex first")
-    }
     val phys = physicalName(st.fields(idx))
     require(!cur.clusterCols.exists(c => key(c) == key(phys)),
       s"dropColumn at $root: '$name' is a cluster column — recluster " +
@@ -1009,50 +943,11 @@ object TxTable {
     if (!tryCommit(spark, root, cur.version + 1,
         cur.headers + ("schema" -> normSchema(ns).json)
           + ("dropped" -> retired),
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        entryLines(cur) ++ dvLines(cur)))
       throw new CommitConflict(
         s"dropColumn at $root: snapshot v${cur.version} went stale")
     cur.version + 1
   }
-
-  /** Reject a batch that re-introduces an id a pinned index has
-    * deletion-vector-masked: index DVs are BY VALUE (deleted ids,
-    * [[deleteWhere]]), so admitting a re-inserted id would either keep
-    * the new row masked in the index or — if the mask were lifted —
-    * resurrect the OLD index entry beside the new one (two index rows,
-    * one corpus row; corpus DVs are positional and unaffected).
-    * Re-ingest of deleted ids goes through [[mergeInto]]/[[overwrite]],
-    * which materialize the DVs and rebuild the index. One broadcast
-    * semi-join per index WITH accumulated DVs (KB–MB side), skipped
-    * entirely otherwise.
-    */
-  private def checkIndexDvReinsert(
-      spark: SparkSession, root: String, s: Snapshot, df: DataFrame,
-      op: String): Unit =
-    indexSpecs(s).foreach { sp =>
-      s.indexDvFiles.get(sp.name).filter(_.nonEmpty).foreach { dvf =>
-        val ids = spark.read.parquet(dvf.map(f => s"$root/$f"): _*)
-          .select(col("id").as("_dv_id"))
-        val clash = df.select(col(sp.idCol).cast("long").as("_bid"))
-          .join(broadcast(ids), col("_bid") === col("_dv_id"), "left_semi")
-          .limit(1).count()
-        require(clash == 0L,
-          s"$op: batch re-inserts id(s) masked by index '${sp.name}' " +
-            "deletion vectors — the old index entry would resurrect " +
-            "beside the new row; re-ingest deleted ids via mergeInto/" +
-            "overwrite (they materialize the DVs), or dropIndex first")
-      }
-    }
-
-  /** The manifest lines of every pinned index (optionally excluding
-    * one being rebuilt), stats carried forward verbatim.
-    */
-  private def indexLines(
-      s: Snapshot, except: Set[String] = Set.empty): Seq[String] =
-    s.indexFiles.toSeq.sortBy(_._1).collect {
-      case (n, fs) if !except.contains(n) => fs.map(lineFor(s, _))
-    }.flatten
 
   /** Create a new table at `root` (version 0). `clusterCol` (integral)
     * enables range-clustered files + manifest min/max stats on every
@@ -1091,94 +986,6 @@ object TxTable {
     0L
   }
 
-  /** One pinned index to build inside [[createIndexed]]'s single
-    * commit — the public face of the internal IVF/BM25 specs.
-    */
-  sealed trait IndexBuild { def name: String }
-  final case class IvfIndexBuild(
-      name: String, idCol: String, vecCol: String,
-      numCentroids: Int = 16) extends IndexBuild
-  final case class Bm25IndexBuild(
-      name: String, idCol: String, textCol: String,
-      termBuckets: Int = 64) extends IndexBuild
-  final case class PhraseIndexBuild(
-      name: String, idCol: String, textCol: String,
-      termBuckets: Int = 64) extends IndexBuild
-
-  /** Create a table AND build its pinned indexes in ONE commit: data
-    * files, every index's files and sidecars, and the index headers
-    * publish under a single v0 manifest rename. Equivalent by
-    * construction to `create` + `buildIvfIndex`/`buildBm25Index`
-    * chains (same routing, same header algebra — each build there
-    * reads back exactly the corpus this is handed), minus one
-    * manifest round-trip, one corpus re-read and one commit PER
-    * index: a create-then-index lifecycle of 1 + k commits collapses
-    * to 1. `df` is read several times (data write, per-index routing,
-    * BM25 moments, IVF k-means) — materialize nondeterministic frames
-    * first, the usual multi-pass contract.
-    */
-  def createIndexed(
-      df: DataFrame, root: String, indexes: Seq[IndexBuild],
-      clusterCol: Option[String] = None, buckets: Int = 8,
-      check: Option[String] = None): Long = {
-    val spark = df.sparkSession
-    require(versions(spark, root).isEmpty,
-      s"TxTable already exists at $root")
-    require(indexes.map(_.name).distinct.size == indexes.size,
-      s"duplicate index names in ${indexes.map(_.name)}")
-    indexes.foreach(ib => require(ib.name.matches("[A-Za-z0-9_-]+"),
-      s"bad index name '${ib.name}'"))
-    val clusterCols = clusterCol.toSeq
-    val headers0 = check.map(c => Map("check" -> c))
-      .getOrElse(Map.empty[String, String])
-    requireNoCaseDuplicates(df.schema, s"createIndexed at $root")
-    enforceCheck(df, headers0, s"createIndexed at $root")
-    val baseHeaders = headers0 + schemaHeaderFor(df) ++ (
-      if (clusterCols.isEmpty) Map.empty[String, String]
-      else Map("cluster" -> clusterCols.mkString(",")))
-    val entries =
-      writeDataFiles(toPhysical(df, baseHeaders), root, clusterCols, buckets)
-    // stage every index exactly as its standalone build would: files
-    // land under root now, the manifest rename below publishes them
-    val built: Seq[(String, String, Seq[String])] = indexes.map {
-      case iv: IvfIndexBuild =>
-        import org.apache.spark.ml.functions.array_to_vector
-        val featured = df.withColumn("features",
-          array_to_vector(col(iv.vecCol).cast("array<double>")))
-        val model =
-          graft.operators.Similarity.coarseQuantizer(featured, iv.numCentroids)
-        import spark.implicits._
-        val sidecarRel = s"index/${iv.name}/_centroids-${UUID.randomUUID()}"
-        model.clusterCenters.zipWithIndex.toSeq
-          .map { case (c, i) => (i, c.toArray.toSeq) }
-          .toDF("cell", "centroid")
-          .coalesce(1).write.parquet(new Path(root, sidecarRel).toString)
-        val spec = IvfSpec(iv.name, sidecarRel, iv.idCol, iv.vecCol)
-        val (idxEntries, _) = idxEntriesFor(spark, root, Seq(spec), df, buckets)
-        (s"index:${iv.name}", s"$sidecarRel|${iv.idCol}|${iv.vecCol}",
-          idxEntries)
-      case bm: Bm25IndexBuild =>
-        val spec0 = Bm25Spec(bm.name, bm.idCol, bm.textCol,
-          bm.termBuckets, 0L, 0L)
-        val (idxEntries, moments) =
-          idxEntriesFor(spark, root, Seq(spec0), df, buckets)
-        val (n, sd) = moments(bm.name)
-        (s"index:${bm.name}",
-          spec0.copy(nDocs = n, sumDl = sd).headerValue, idxEntries)
-      case ph: PhraseIndexBuild =>
-        val spec = PhraseSpec(ph.name, ph.idCol, ph.textCol,
-          ph.termBuckets)
-        val (idxEntries, _) =
-          idxEntriesFor(spark, root, Seq(spec), df, buckets)
-        (s"index:${ph.name}", spec.headerValue, idxEntries)
-    }
-    val headers = baseHeaders ++ built.map(b => b._1 -> b._2)
-    if (!tryCommit(spark, root, 0L, headers,
-        entries ++ built.flatMap(_._3)))
-      throw new CommitConflict(s"concurrent create at $root")
-    0L
-  }
-
   /** Blind append: retries past lost races (bounded), since adding
     * files commutes with any interleaved commit's file additions.
     */
@@ -1195,31 +1002,18 @@ object TxTable {
     val entries =
       writeDataFiles(toPhysical(df, preChecked), root,
         pre.clusterCols, buckets)
-    // pinned indexes: route ONLY the new rows through each sidecar —
-    // the corpus-side delta and the index-side delta publish together
-    val (idxEntries, idxMoments) =
-      idxEntriesFor(spark, root, indexSpecs(pre), df, buckets)
     var attempt = 0
     while (attempt <= maxRetries) {
       val cur = latestSnapshot(spark, root)
-      if (!sameIndexes(pre, cur))
-        throw new CommitConflict(
-          s"append at $root: index set changed since v${pre.version}")
       // a CHECK constraint installed since `pre` must gate THIS commit
       // too (validate-then-commit is not atomic across retries)
       if (cur.headers.get("check") != pre.headers.get("check"))
         enforceCheck(df, cur.headers, s"append at $root")
-      // per attempt: a concurrent deleteWhere may have masked ids this
-      // batch re-inserts
-      checkIndexDvReinsert(spark, root, cur, df, s"append at $root")
-      // schema validation + union-widening against THIS attempt's tip;
-      // BM25 index moments fold into the tip's (a lost race re-folds)
-      val headers = indexHeadersWith(cur,
-        checkSchema(df, cur.headers, s"append at $root", mergeSchema),
-        idxMoments, add = true)
+      // schema validation + union-widening against THIS attempt's tip
+      val headers =
+        checkSchema(df, cur.headers, s"append at $root", mergeSchema)
       if (tryCommit(spark, root, cur.version + 1, headers,
-          entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-            idxDvLines(cur) ++ entries ++ idxEntries))
+          entryLines(cur) ++ dvLines(cur) ++ entries))
         return cur.version + 1
       attempt += 1
     }
@@ -1253,25 +1047,15 @@ object TxTable {
     val entries =
       writeDataFiles(toPhysical(df, pre.headers), root,
         pre.clusterCols, buckets)
-    val (idxEntries, idxMoments) =
-      idxEntriesFor(spark, root, indexSpecs(pre), df, buckets)
     var attempt = 0
     while (attempt <= maxRetries) {
       val cur = latestSnapshot(spark, root)
       if (committed(cur)) return None // raced with our own redelivery
-      if (!sameIndexes(pre, cur))
-        throw new CommitConflict(
-          s"addStreamingBatch at $root: index set changed since v${pre.version}")
       if (cur.headers.get("check") != pre.headers.get("check"))
         enforceCheck(df, cur.headers, s"addStreamingBatch at $root")
-      checkIndexDvReinsert(spark, root, cur, df,
-        s"addStreamingBatch at $root")
       if (tryCommit(spark, root, cur.version + 1,
-          indexHeadersWith(cur,
-            cur.headers + (key -> batchId.toString), idxMoments,
-            add = true),
-          entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-            idxDvLines(cur) ++ entries ++ idxEntries))
+          cur.headers + (key -> batchId.toString),
+          entryLines(cur) ++ dvLines(cur) ++ entries))
         return Some(cur.version + 1)
       attempt += 1
     }
@@ -1296,7 +1080,7 @@ object TxTable {
     // new files carry, and the `dropped` retirement list (which only
     // guards against resurrecting OLD files' bytes) is cleared
     val logicalCluster = cur.clusterCols.map(c => logicalClusterCol(cur, c))
-    val headers0 = {
+    val headers = {
       val base =
         if (cur.headers.contains("schema"))
           cur.headers - "dropped" + schemaHeaderFor(df)
@@ -1304,16 +1088,11 @@ object TxTable {
       if (logicalCluster.isEmpty) base
       else base + ("cluster" -> logicalCluster.mkString(","))
     }
-    val (idxEntries, idxMoments) =
-      idxEntriesFor(spark, root, indexSpecs(cur), df, buckets)
-    // indexes rebuild from the replacing frame: its moments ARE the
-    // corpus moments now
-    val headers = indexHeadersWith(cur, headers0, idxMoments, add = false)
     // the rename-era mapping ends here, but reserved-name mapping
     // (`_metadata`) may re-apply through the fresh schema header
     val entries =
       writeDataFiles(toPhysical(df, headers), root, logicalCluster,
-        buckets) ++ idxEntries
+        buckets)
     if (!tryCommit(spark, root, expectedVersion + 1, headers, entries))
       throw new CommitConflict(
         s"overwrite at $root: version ${expectedVersion + 1} already " +
@@ -1364,13 +1143,6 @@ object TxTable {
       val merged = graft.operators.MergeUpsert.merge(
           target, source, keyCol, valueCols, tombstoneCol)
         .drop("action")
-      // pinned indexes are REBUILT from the merged result inside the
-      // same commit (the merge already rewrites every corpus file, so
-      // re-routing the result is proportional cost) — version v+1's
-      // index rows are exactly its corpus rows, never a stale mix;
-      // BM25 moments follow the merged frame absolutely
-      val (idxEntries, idxMoments) =
-        idxEntriesFor(spark, root, indexSpecs(cur), merged, buckets)
       // change feed enabled: the SAME commit also publishes explicit
       // row-level change files ([[mergeChanges]] — source-bounded,
       // never table-bounded), so the change stream tracks this merge
@@ -1394,10 +1166,8 @@ object TxTable {
             .map(n => s"$rel/$n")
         }
       val entries = writeDataFiles(toPhysical(merged, cur.headers), root,
-        cur.clusterCols, buckets) ++ idxEntries ++ cdcEntries
-      if (tryCommit(spark, root, cur.version + 1,
-          indexHeadersWith(cur, cur.headers, idxMoments, add = false),
-          entries))
+        cur.clusterCols, buckets) ++ cdcEntries
+      if (tryCommit(spark, root, cur.version + 1, cur.headers, entries))
         committed = cur.version + 1
       else if (attempt >= maxRetries)
         throw new CommitConflict(
@@ -1425,8 +1195,7 @@ object TxTable {
       Map("check" -> checkExpr), s"setCheckConstraint at $root")
     if (!tryCommit(spark, root, cur.version + 1,
         cur.headers + ("check" -> checkExpr),
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        entryLines(cur) ++ dvLines(cur)))
       throw new CommitConflict(
         s"setCheckConstraint at $root: snapshot v${cur.version} went stale")
     cur.version + 1
@@ -1450,8 +1219,7 @@ object TxTable {
     val headers =
       if (enabled) cur.headers + ("cdc" -> "true") else cur.headers - "cdc"
     if (!tryCommit(spark, root, cur.version + 1, headers,
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        entryLines(cur) ++ dvLines(cur)))
       throw new CommitConflict(
         s"setChangeFeed at $root: snapshot v${cur.version} went stale")
     cur.version + 1
@@ -1498,8 +1266,7 @@ object TxTable {
     val cur = latestSnapshot(spark, root)
     require(cur.headers.contains("check"), s"no CHECK constraint at $root")
     if (!tryCommit(spark, root, cur.version + 1, cur.headers - "check",
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        entryLines(cur) ++ dvLines(cur)))
       throw new CommitConflict(
         s"dropCheckConstraint at $root: snapshot v${cur.version} went stale")
     cur.version + 1
@@ -1507,8 +1274,8 @@ object TxTable {
 
   /** RESTORE the table to an earlier version AS A NEW COMMIT (the
     * Delta `RESTORE` shape): version v+1 re-lists `toVersion`'s
-    * complete state — data files, stats, pinned-index lines, deletion
-    * vectors, and headers — so the rollback is itself versioned,
+    * complete state — data files, stats, deletion vectors, and
+    * headers — so the rollback is itself versioned,
     * auditable, and concurrent-safe (rename-arbitrated like every
     * commit; a lost race means the tip moved and the caller decides
     * against the new history). Nothing is copied: manifests reference
@@ -1524,17 +1291,15 @@ object TxTable {
       s"restore at $root: version $toVersion is ahead of v${cur.version}")
     val target = snapshot(spark, root, toVersion)
     if (!tryCommit(spark, root, cur.version + 1, target.headers,
-        entryLines(target) ++ indexLines(target) ++ dvLines(target) ++
-          idxDvLines(target)))
+        entryLines(target) ++ dvLines(target)))
       throw new CommitConflict(
         s"restore at $root: snapshot v${cur.version} went stale")
     cur.version + 1
   }
 
   /** DESCRIBE HISTORY: one row per committed version — (version,
-    * n_files, n_index_files, n_dv_files, headers as sorted
-    * `k=v` CSV). `n_dv_files` counts corpus position files AND
-    * per-index deleted-ID files (both are the version's
+    * n_files, n_dv_files, headers as sorted `k=v` CSV). `n_dv_files`
+    * counts the version's deletion-vector position files (its
     * merge-on-read state). Manifest metadata only; no data file is
     * opened.
     */
@@ -1542,13 +1307,10 @@ object TxTable {
     import spark.implicits._
     versions(spark, root).map { v =>
       val s = snapshot(spark, root, v)
-      (v, s.files.size.toLong,
-        s.indexFiles.values.map(_.size).sum.toLong,
-        s.dvFiles.size.toLong +
-          s.indexDvFiles.values.map(_.size).sum.toLong,
+      (v, s.files.size.toLong, s.dvFiles.size.toLong,
         s.headers.toSeq.sortBy(_._1)
           .map { case (k, x) => s"$k=$x" }.mkString(","))
-    }.toDF("version", "n_files", "n_index_files", "n_dv_files", "headers")
+    }.toDF("version", "n_files", "n_dv_files", "headers")
   }
 
   /** MERGE-ON-READ delete: rows matching `predicate` disappear from
@@ -1576,19 +1338,6 @@ object TxTable {
     *    DV-aware, so already-deleted rows can't re-match. A predicate
     *    matching nothing commits nothing and returns the current
     *    version.
-    *  - pinned derived indexes ([[buildIvfIndex]]) get their own DV
-    *    channel IN THE SAME COMMIT: the matching scan denormalizes
-    *    each index's id column into the position file, a per-index
-    *    `idxdv/<name>/` deleted-ID sidecar is projected from it (no
-    *    second corpus scan), and every probe/read anti-joins those
-    *    ids exactly like corpus reads anti-join positions — so a
-    *    GDPR delete on an indexed 100 TB table is still one predicate
-    *    scan, and the both-or-neither pin holds (one manifest rename
-    *    publishes corpus DV + index DV). Requires the index id column
-    *    to identify its row (the AnnIndex contract). [[mergeInto]]/
-    *    [[overwrite]] materialize index DVs too (they rebuild the
-    *    index from the DV-aware merged corpus); [[compact]]/
-    *    [[autoCompact]] carry them with the index lines they guard.
     *  - optimistic retry like [[append]]: a lost race re-reads the
     *    latest snapshot and re-runs the matching scan.
     *
@@ -1610,8 +1359,8 @@ object TxTable {
     * are 10⁵ expression nodes the driver analyzes/codegens BEFORE any
     * data is read (plan-size blowup), and parquet pushdown gives up
     * far below that anyway. The semi-join keeps the plan O(1), ships
-    * the keys once per executor, and stays exact. Same DV semantics,
-    * retry loop and pinned-index ride-along as [[deleteWhere]].
+    * the keys once per executor, and stays exact. Same DV semantics
+    * and retry loop as [[deleteWhere]].
     */
   def deleteKeys(
       spark: SparkSession, root: String, keyCol: String,
@@ -1649,7 +1398,6 @@ object TxTable {
     var attempt = 0
     while (true) {
       val cur = latestSnapshot(spark, root)
-      val specs = indexSpecs(cur)
       val cand = candidates(cur)
       if (cand.isEmpty) return cur.version // no file can match
       // DV-aware scan with positions: already-deleted rows can't match
@@ -1677,26 +1425,8 @@ object TxTable {
           spark.read.parquet(cur.dvFiles.map(f => s"$root/$f"): _*)
             .select(col("file").as("_dv_f"), col("row_index").as("_dv_ri")),
           Seq("_dv_f", "_dv_ri"), "left_anti")
-      // pinned indexes ride along: the SAME matching scan also yields
-      // each index's deleted ids (denormalized into the position file,
-      // columnar — corpus readers never decode them), so the delete
-      // stays ONE predicate scan regardless of index count. Probes
-      // anti-join these ids exactly like corpus reads anti-join
-      // positions; requires the index id column to identify its row
-      // (the AnnIndex contract — routeRows maps rows 1:1).
-      val idCols = specs.map(sp =>
-        col(sp.idCol).cast("long").as(s"_id_${sp.name}"))
-      // BM25 indexes also need each deleted doc's LENGTH (to decrement
-      // the header's exact (n, Σdl) moments — same tokenization as the
-      // build, denormalized into the position file so the moment
-      // update reads KB, not the corpus)
-      val bmSpecs = specs.collect { case bm: Bm25Spec => bm }
-      val dlCols = bmSpecs.map(bm =>
-        size(split(lower(trim(col(bm.textCol))), "\\s+"))
-          .cast("long").as(s"_dl_${bm.name}"))
       val hits = matcher(live)
-        .select(col("_dv_f").as("file") +:
-          col("_dv_ri").as("row_index") +: (idCols ++ dlCols): _*)
+        .select(col("_dv_f").as("file"), col("_dv_ri").as("row_index"))
       val rel = s"dv/${UUID.randomUUID()}"
       val dest = new Path(root, rel)
       hits.coalesce(math.max(1, dvBuckets))
@@ -1706,63 +1436,16 @@ object TxTable {
         .map(_.getPath.getName)
         .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
         .sorted
-      // one aggregate over the KB–MB position file: the match count
-      // AND, per pinned index, a NULL-id count — a NULL id (legacy row
-      // ingested before routeRows enforced the contract) would write a
-      // DV entry the equality anti-join never matches, silently
-      // keeping the index entry alive after this delete
-      val posAgg = spark.read.parquet(dest.toString).agg(
-        count(lit(1)).as("_n"),
-        specs.map(sp => sum(when(col(s"_id_${sp.name}").isNull, 1L)
-          .otherwise(0L)).as(s"_nulls_${sp.name}")) ++
-          bmSpecs.map(bm => coalesce(sum(col(s"_dl_${bm.name}")), lit(0L))
-            .as(s"_sumdl_${bm.name}")): _*).head()
-      val n = posAgg.getLong(0)
-      if (n == 0) {
+      // an empty position file (KB–MB to read back) means no match
+      if (spark.read.parquet(dest.toString).isEmpty) {
         f.delete(dest, true) // nothing matched: no commit, no garbage
         return cur.version
       }
-      specs.zipWithIndex.foreach { case (sp, i) =>
-        if (posAgg.getLong(i + 1) > 0) {
-          f.delete(dest, true)
-          throw new IllegalArgumentException(
-            s"deleteWhere at $root: ${posAgg.getLong(i + 1)} matched " +
-              s"row(s) have a NULL (or non-long-castable) '${sp.idCol}' " +
-              s"id for index '${sp.name}' — their index entries cannot " +
-              "be deletion-vector-masked; rebuild the index over " +
-              "non-null ids first")
-        }
-      }
-      // per-index deleted-ID sidecars, projected from the (KB–MB)
-      // position file just written — no second corpus scan
-      val idxDvEntries = specs.map { sp =>
-        val idxRel = s"idxdv/${sp.name}/${UUID.randomUUID()}"
-        spark.read.parquet(dest.toString)
-          .select(col(s"_id_${sp.name}").as("id")).distinct()
-          .coalesce(1)
-          .write.parquet(new Path(root, idxRel).toString)
-        val idxNames = f.listStatus(new Path(root, idxRel)).toSeq
-          .map(_.getPath.getName)
-          .filter(nm => nm.endsWith(".parquet") && !nm.startsWith("_"))
-          .sorted
-        (idxRel, idxNames.map(nm => s"$idxRel/$nm"))
-      }
-      // BM25 header moments decrement by the delete's exact (n, Σdl) —
-      // negative deltas through the same integer fold appends use, so
-      // a probe at v+1 divides stats consistent with its live postings
-      val delMoments = bmSpecs.zipWithIndex.map { case (bm, j) =>
-        bm.name -> (-n, -posAgg.getLong(1 + specs.size + j))
-      }.toMap
-      if (tryCommit(spark, root, cur.version + 1,
-          indexHeadersWith(cur, cur.headers, delMoments, add = true),
-          entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-            idxDvLines(cur) ++ names.map(nm => s"$rel/$nm") ++
-            idxDvEntries.flatMap(_._2)))
+      if (tryCommit(spark, root, cur.version + 1, cur.headers,
+          entryLines(cur) ++ dvLines(cur) ++ names.map(nm => s"$rel/$nm")))
         return cur.version + 1
-      // lost the race: unstage everything and retry against the new tip
+      // lost the race: unstage the positions and retry against the new tip
       f.delete(dest, true)
-      idxDvEntries.foreach { case (idxRel, _) =>
-        f.delete(new Path(root, idxRel), true) }
       attempt += 1
       if (attempt > maxRetries)
         throw new CommitConflict(
@@ -1792,8 +1475,7 @@ object TxTable {
     * subsequent [[readRange]]/[[readBox]]/[[deleteRange]] file-level
     * pruning on the new keys. Same contracts as [[compact]]:
     * read-modify-write conflict semantics, DVs MATERIALIZE (survivors
-    * rewritten), pinned index lines + index DVs carry verbatim (rows
-    * preserved). Returns the new version.
+    * rewritten). Returns the new version.
     */
   def recluster(
       spark: SparkSession, root: String, clusterCols: Seq[String],
@@ -1813,8 +1495,7 @@ object TxTable {
 
   /** Shared rewrite body of [[compact]] and [[recluster]]: read the
     * latest snapshot through its DVs, rewrite into `clusterCols`
-    * layout, commit with index lines + index DVs carried (rows are
-    * preserved, so pinned indexes stay valid). `keepHeader` keeps the
+    * layout and commit the new files alone. `keepHeader` keeps the
     * current `cluster=` header (compact); otherwise it follows
     * `clusterCols` (recluster).
     */
@@ -1837,7 +1518,7 @@ object TxTable {
       else if (clusterCols.isEmpty) cur.headers - "cluster"
       else cur.headers + ("cluster" -> clusterCols.mkString(","))
     if (!tryCommit(spark, root, cur.version + 1, headers,
-        entries ++ indexLines(cur) ++ idxDvLines(cur)))
+        entries))
       throw new CommitConflict(
         s"$op at $root: snapshot v${cur.version} went stale")
     cur.version + 1
@@ -1875,655 +1556,10 @@ object TxTable {
       keptLarge.contains(line.split("\t").head)
     }
     if (!tryCommit(spark, root, cur.version + 1, cur.headers,
-        keptLines ++ entries ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur)))
+        keptLines ++ entries ++ dvLines(cur)))
       throw new CommitConflict(
         s"autoCompact at $root: snapshot v${cur.version} went stale")
     Some(cur.version + 1)
-  }
-
-  // ---------------------------------------------------------- indexes
-  //
-  // Pinned derived indexes: an ANN layout published by the SAME
-  // manifest rename as the corpus it indexes, closing the staleness
-  // window between a corpus commit and an index rebuild (a reader of
-  // version N sees corpus N and index N both-or-neither — there is no
-  // instant at which corpus v+1 is visible with an index built on v,
-  // the lost-consistency hazard of keeping the AnnIndex layouts as
-  // independent parquet dirs; cf. the reference's harvest-while-serving
-  // loop, tests/test_serve.py:274-306, which feeds both sides).
-  //
-  // Layout: index files live under `index/<name>/<uuid>/part-*.parquet`
-  // with schema (idCol long, vecCol array<float>, cell int),
-  // range-clustered by `cell` with per-file [min,max] cell stats in the
-  // manifest — probes prune at the FILE level from the manifest (the
-  // readRange discipline) instead of Hive partition dirs, so the probe
-  // path and the corpus path share one skipping mechanism. The trained
-  // centroids sit in an immutable `index/<name>/_centroids-<uuid>`
-  // sidecar named by the `index:<name>` header.
-  //
-  // Maintenance contract: once declared, EVERY commit keeps the pin
-  // valid — append/addStreamingBatch route only the new rows through
-  // the sidecar (one scan of the batch, broadcast centroids, no
-  // shuffle); mergeInto/overwrite re-route the result they are already
-  // rewriting (proportional, not super-linear, cost); compact/
-  // autoCompact carry index lines verbatim (the index derives from
-  // ROWS, which compaction preserves). The quantizer itself never
-  // silently retrains — a drifting corpus shows up as cell skew and
-  // [[buildIvfIndex]] on a fresh name (then [[dropIndex]]) is the
-  // explicit retrain.
-
-  /** Parsed `index:<name>` header. Two kinds share one maintenance
-    * contract (route-on-write, idxdv-on-delete, carry-on-compact):
-    *  - [[IvfSpec]] (ANN): `<centroid sidecar>|<idCol>|<vecCol>`;
-    *  - [[Bm25Spec]] (inverted text):
-    *    `bm25|<idCol>|<textCol>|<termBuckets>|<nDocs>|<sumDl>` — the
-    *    two corpus-global BM25 moments live IN the header as exact
-    *    integers, so every version's probe divides stats that are
-    *    both-or-neither consistent with its postings (the standalone
-    *    [[graft.ingest.TextIndex]] `_stats` sidecar can skew against
-    *    its postings between non-atomic publishes; here one manifest
-    *    rename carries corpus, postings, AND stats).
-    */
-  private sealed trait IndexSpec {
-    def name: String
-    def idCol: String
-    /** Centroid sidecar to keep live through [[vacuum]], if any. */
-    def sidecarOpt: Option[String]
-    /** The spec with version-varying state (BM25 moments) zeroed —
-      * what "same index SET" means for commit-conflict checks: a
-      * concurrent append legitimately advances the moments, and that
-      * must read as a retryable race, not a structural conflict.
-      */
-    def structure: IndexSpec
-  }
-
-  private final case class IvfSpec(
-      name: String, sidecar: String, idCol: String, vecCol: String)
-      extends IndexSpec {
-    def sidecarOpt: Option[String] = Some(sidecar)
-    def structure: IndexSpec = this
-  }
-
-  private final case class Bm25Spec(
-      name: String, idCol: String, textCol: String, termBuckets: Int,
-      nDocs: Long, sumDl: Long) extends IndexSpec {
-    def sidecarOpt: Option[String] = None
-    def structure: IndexSpec = copy(nDocs = 0L, sumDl = 0L)
-    def headerValue: String =
-      s"bm25|$idCol|$textCol|$termBuckets|$nDocs|$sumDl"
-  }
-
-  /** Positional (phrase) index kind: one row per token occurrence
-    * (id, pos, term, tb) — no corpus-global sidecar at all (phrase
-    * adjacency is per-doc), so maintenance is pure routing.
-    */
-  private final case class PhraseSpec(
-      name: String, idCol: String, textCol: String, termBuckets: Int)
-      extends IndexSpec {
-    def sidecarOpt: Option[String] = None
-    def structure: IndexSpec = this
-    def headerValue: String = s"pos|$idCol|$textCol|$termBuckets"
-  }
-
-  private def indexSpecs(s: Snapshot): Seq[IndexSpec] =
-    s.headers.toSeq.collect {
-      case (k, v) if k.startsWith("index:") =>
-        val name = k.stripPrefix("index:")
-        v.split("\\|") match {
-          case Array("bm25", id, text, tb, n, sd) =>
-            Bm25Spec(name, id, text, tb.toInt, n.toLong, sd.toLong)
-          case Array("pos", id, text, tb) =>
-            PhraseSpec(name, id, text, tb.toInt)
-          case Array(sc, id, vec) => IvfSpec(name, sc, id, vec)
-          case other => throw new IllegalStateException(
-            s"malformed index header $k=${other.mkString("|")}")
-        }
-    }.sortBy(_.name)
-
-  /** Declared index names at the latest version. */
-  def indexNames(spark: SparkSession, root: String): Seq[String] =
-    indexSpecs(latestSnapshot(spark, root)).map(_.name)
-
-  private def loadCentroids(
-      spark: SparkSession, root: String,
-      spec: IvfSpec): Array[(Int, Array[Double])] = {
-    val cents = spark.read.parquet(s"$root/${spec.sidecar}")
-      .collect()
-      .map(r => (r.getInt(0),
-        r.getAs[scala.collection.Seq[Double]](1).toArray))
-      .sortBy(_._1)
-    require(cents.nonEmpty, s"empty centroid sidecar ${spec.sidecar}")
-    cents
-  }
-
-  /** Assign each row to its nearest centroid (squared Euclidean, ties
-    * to the lowest cell id) — broadcast centroids, scan-local kernel,
-    * the batch never shuffles. The SAME rule routes the initial build
-    * and every later append/merge, so a row's cell is a pure function
-    * of (vector, sidecar) and rebuild-free maintenance is exact.
-    */
-  private def routeRows(
-      spark: SparkSession, root: String, spec: IvfSpec,
-      df: DataFrame): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(loadCentroids(spark, root, spec))
-    df.select(col(spec.idCol).cast("long"),
-        col(spec.vecCol).cast("array<double>"))
-      .as[(java.lang.Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (idBoxed, v) =>
-          // the AnnIndex contract: the id column IDENTIFIES its row as
-          // a long. A NULL (or non-long-castable) id would write a DV
-          // sidecar entry that never matches the deletion anti-join —
-          // the index entry would keep serving after a corpus delete —
-          // so reject it at ingest, the only cheap place
-          require(idBoxed != null,
-            s"index '${spec.name}': id column '${spec.idCol}' is NULL " +
-              "or not long-castable for an ingested row — pinned " +
-              "indexes need long-identifying ids (map to a surrogate " +
-              "id first)")
-          val id = idBoxed.longValue()
-          var best = cs(0)._1
-          var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < cs.length) {
-            val c = cs(ci)._2
-            var d = 0.0; var j = 0
-            val n = math.min(v.length, c.length)
-            while (j < n) { val t = v(j) - c(j); d += t * t; j += 1 }
-            if (d < bestD) { bestD = d; best = cs(ci)._1 }
-            ci += 1
-          }
-          (id, v.map(_.toFloat), best)
-        }
-      }
-      .toDF(spec.idCol, spec.vecCol, "cell")
-  }
-
-  /** A batch's BM25 postings, tokenized and counted EXACTLY like
-    * [[graft.operators.Bm25.score]] / [[graft.ingest.TextIndex]]
-    * (lowercase-trim whitespace split; dl counts empty tokens), with
-    * the doc length denormalized into every posting and the term
-    * bucket `tb = pmod(hash(term), termBuckets)` as the clustering
-    * key. NULL ids are rejected scan-side ([[routeRows]]' contract —
-    * a NULL id's idxdv entry could never mask its postings).
-    */
-  private def bm25Postings(df: DataFrame, spec: Bm25Spec): DataFrame = {
-    val toks = split(lower(trim(col(spec.textCol))), "\\s+")
-    val checkedId = when(col(spec.idCol).cast("long").isNull,
-      raise_error(concat(lit(
-        s"index '${spec.name}': id column '${spec.idCol}' is NULL or " +
-          "not long-castable for an ingested row — pinned indexes " +
-          "need long-identifying ids")))) // never returns
-      .otherwise(col(spec.idCol).cast("long"))
-    df.select(checkedId.as(spec.idCol),
-        toks.as("_toks"),
-        size(toks).cast("long").as("dl"))
-      .select(col(spec.idCol), col("dl"), explode(col("_toks")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col(spec.idCol), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("tb", pmod(hash(col("term")), lit(spec.termBuckets)))
-  }
-
-  /** A batch's positional rows, tokenized EXACTLY like
-    * [[graft.ingest.TextIndex.writePositions]] (original token index,
-    * empties keep their slots so adjacency is literal), term-bucket
-    * clustered. Same NULL-id rejection as [[bm25Postings]].
-    */
-  private def phraseRows(df: DataFrame, spec: PhraseSpec): DataFrame = {
-    val toks = split(lower(trim(col(spec.textCol))), "\\s+")
-    val checkedId = when(col(spec.idCol).cast("long").isNull,
-      raise_error(concat(lit(
-        s"index '${spec.name}': id column '${spec.idCol}' is NULL or " +
-          "not long-castable for an ingested row — pinned indexes " +
-          "need long-identifying ids"))))
-      .otherwise(col(spec.idCol).cast("long"))
-    df.select(checkedId.as(spec.idCol),
-        posexplode(toks).as(Seq("pos", "term")))
-      .filter(col("term") =!= "")
-      .withColumn("tb", pmod(hash(col("term")), lit(spec.termBuckets)))
-  }
-
-  /** The batch's exact BM25 moments (row count, Σ doc length) — the
-    * integer deltas a commit folds into the index header. Termless
-    * docs count toward BOTH (they shape N and avgdl, the
-    * [[graft.ingest.TextIndex.writeBm25]] contract).
-    */
-  private def bm25Moments(df: DataFrame, spec: Bm25Spec): (Long, Long) = {
-    val toks = split(lower(trim(col(spec.textCol))), "\\s+")
-    val r = df.agg(count(lit(1)).as("n"),
-      coalesce(sum(size(toks).cast("long")), lit(0L)).as("s")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Route a batch through every pinned index sidecar: manifest
-    * entries for the new index files, plus per-BM25-index (n, Σdl)
-    * batch moments the commit folds into the header
-    * ([[indexHeadersWith]] — added for appends, absolute for
-    * rebuilds).
-    */
-  private def idxEntriesFor(
-      spark: SparkSession, root: String, specs: Seq[IndexSpec],
-      df: DataFrame, buckets: Int): (Seq[String], Map[String, (Long, Long)]) = {
-    val entries = specs.flatMap {
-      case iv: IvfSpec =>
-        writeFilesUnder(routeRows(spark, root, iv, df), root,
-          s"index/${iv.name}/${UUID.randomUUID()}", Seq("cell"), buckets)
-      case bm: Bm25Spec =>
-        writeFilesUnder(bm25Postings(df, bm), root,
-          s"index/${bm.name}/${UUID.randomUUID()}", Seq("tb"), buckets)
-      case ph: PhraseSpec =>
-        writeFilesUnder(phraseRows(df, ph), root,
-          s"index/${ph.name}/${UUID.randomUUID()}", Seq("tb"), buckets)
-    }
-    val moments = specs.collect {
-      case bm: Bm25Spec => bm.name -> bm25Moments(df, bm)
-    }.toMap
-    (entries, moments)
-  }
-
-  /** Fold BM25 batch moments into a snapshot's index headers:
-    * `add = true` adds the deltas to the snapshot's moments (append
-    * paths — exact integer algebra, no float drift), `add = false`
-    * replaces them (rebuild paths: overwrite/merge re-route the whole
-    * result, so the batch moments ARE the corpus moments).
-    */
-  private def indexHeadersWith(
-      s: Snapshot, headers: Map[String, String],
-      moments: Map[String, (Long, Long)], add: Boolean): Map[String, String] =
-    if (moments.isEmpty) headers
-    else {
-      val byName = indexSpecs(s).collect {
-        case bm: Bm25Spec => bm.name -> bm
-      }.toMap
-      headers ++ moments.map { case (name, (bn, bs)) =>
-        val bm = byName(name)
-        val v =
-          if (add) bm.copy(nDocs = bm.nDocs + bn, sumDl = bm.sumDl + bs)
-          else bm.copy(nDocs = bn, sumDl = bs)
-        s"index:$name" -> v.headerValue
-      }
-    }
-
-  // two commits that routed through DIFFERENT sidecars must not both
-  // publish — an index set that changed mid-flight makes the staged
-  // routing stale, which is a conflict, not a retry. Compared on
-  // STRUCTURE: BM25 moments legitimately advance under concurrent
-  // appends (a retry re-folds its deltas into the new tip's moments).
-  private def sameIndexes(a: Snapshot, b: Snapshot): Boolean =
-    indexSpecs(a).map(_.structure) == indexSpecs(b).map(_.structure)
-
-  /** Declare + build an IVF index over the CURRENT corpus and publish
-    * it pinned to a new version (corpus files unchanged, index files
-    * added, `index:<name>` header set) — one atomic commit.
-    * Read-modify-write conflict semantics: a commit that interleaves
-    * makes the built index stale, so this fails rather than retries.
-    * Returns the committed version.
-    */
-  def buildIvfIndex(
-      spark: SparkSession, root: String, name: String,
-      idCol: String, vecCol: String, numCentroids: Int = 16,
-      buckets: Int = 8): Long = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"bad index name '$name'")
-    val cur = latestSnapshot(spark, root)
-    require(!cur.headers.contains(s"index:$name"),
-      s"index '$name' already exists at $root")
-    val corpus = readVersion(spark, root, cur.version)
-    import org.apache.spark.ml.functions.array_to_vector
-    val featured = corpus.withColumn("features",
-      array_to_vector(col(vecCol).cast("array<double>")))
-    val model = graft.operators.Similarity.coarseQuantizer(featured, numCentroids)
-    import spark.implicits._
-    val sidecarRel = s"index/$name/_centroids-${UUID.randomUUID()}"
-    model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.parquet(new Path(root, sidecarRel).toString)
-    // the model only supplies centroids; assignment goes through
-    // routeRows so build-time and append-time cells obey ONE rule
-    val spec = IvfSpec(name, sidecarRel, idCol, vecCol)
-    val (entries, _) = idxEntriesFor(spark, root, Seq(spec), corpus, buckets)
-    val headers = cur.headers +
-      (s"index:$name" -> s"$sidecarRel|$idCol|$vecCol")
-    if (!tryCommit(spark, root, cur.version + 1, headers,
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur) ++ entries))
-      throw new CommitConflict(
-        s"buildIvfIndex at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
-  /** Declare + build a PINNED BM25 inverted index over the CURRENT
-    * corpus (the lexical twin of [[buildIvfIndex]], closing the skew
-    * the standalone [[graft.ingest.TextIndex]] layout allows: there,
-    * corpus and postings publish non-atomically and a corpus
-    * `deleteWhere` leaves deleted docs serving from postings). Here
-    * ONE manifest rename publishes corpus, postings (term-bucket
-    * range-clustered under `index/<name>/`, min/max `tb` stats for
-    * file-level probe pruning), and the two corpus-global BM25
-    * moments (n_docs, Σdl) as exact header integers — so
-    * [[bm25ProbeIndexed]] at any version is row-identical to
-    * [[graft.operators.Bm25.score]] over [[readVersion]] at the same
-    * version, including after DV deletes (postings anti-join the
-    * `idxdv/` channel; moments decrement in the delete's own commit).
-    *
-    * Maintenance rides the [[buildIvfIndex]] contract: append routes
-    * only the batch through tokenization (+moment fold), mergeInto/
-    * overwrite rebuild, compact carries verbatim, [[deleteWhere]]
-    * masks by id + decrements moments. Same caller contract as
-    * [[graft.ingest.TextIndex.appendBm25]]: appended batches must be
-    * NEW ids. Read-modify-write conflict semantics. Returns the
-    * committed version.
-    */
-  def buildBm25Index(
-      spark: SparkSession, root: String, name: String,
-      idCol: String, textCol: String, termBuckets: Int = 64,
-      buckets: Int = 8): Long = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"bad index name '$name'")
-    require(termBuckets > 0, s"termBuckets must be positive: $termBuckets")
-    val cur = latestSnapshot(spark, root)
-    require(!cur.headers.contains(s"index:$name"),
-      s"index '$name' already exists at $root")
-    // DV-aware corpus read: postings and moments cover SURVIVORS only
-    val corpus = readVersion(spark, root, cur.version)
-    val spec0 = Bm25Spec(name, idCol, textCol, termBuckets, 0L, 0L)
-    val (entries, moments) =
-      idxEntriesFor(spark, root, Seq(spec0), corpus, buckets)
-    val (n, sd) = moments(name)
-    val headers = cur.headers +
-      (s"index:$name" -> spec0.copy(nDocs = n, sumDl = sd).headerValue)
-    if (!tryCommit(spark, root, cur.version + 1, headers,
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur) ++ entries))
-      throw new CommitConflict(
-        s"buildBm25Index at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
-  /** BM25 against the PINNED index: prune index files by manifest
-    * `tb` stats (file-level skipping before any footer opens), filter
-    * to the query terms, anti-join the index deletion vectors, take
-    * per-term df from the pruned scan itself and N/avgdl from the
-    * version's header moments — row-identical to
-    * [[graft.operators.Bm25.score]] on [[readVersion]] of the same
-    * version (same tokenization, same float association). The scan
-    * touches ~|terms|/termBuckets of the postings; nothing
-    * corpus-scale moves. `version < 0` means latest.
-    */
-  def bm25ProbeIndexed(
-      spark: SparkSession, root: String, name: String,
-      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      version: Long = -1L): DataFrame = {
-    require(terms.nonEmpty, "at least one query term required")
-    require(terms.toSet.size == terms.size, s"duplicate query terms: $terms")
-    val s =
-      if (version < 0L) latestSnapshot(spark, root)
-      else snapshot(spark, root, version)
-    val spec = indexSpecs(s).collectFirst {
-      case bm: Bm25Spec if bm.name == name => bm
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no BM25 index '$name' at $root"))
-    import spark.implicits._
-    // term → bucket through Spark's own hash expression (the probe's
-    // pruning predicate must use the exact build-time routing)
-    val tbs = terms.toDF("term")
-      .select(pmod(hash(col("term")), lit(spec.termBuckets)).as("tb"))
-      .distinct().as[Int].collect().toSeq
-    val files = prunedIndexFiles(s, name, tbs)
-    if (files.isEmpty)
-      return readIndexVersion(spark, root, name, s.version)
-        .select(col(spec.idCol), lit(0.0d).as("bm25")).limit(0)
-    val cand = antiJoinIndexDv(spark, root, s, spec,
-      spark.read.parquet(files.map(f => s"$root/$f"): _*)
-        .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*)))
-    // df per term from the (DV-masked) pruned scan; ≤ |terms| rows
-    val dfs = cand.groupBy("term").agg(count(lit(1)).as("_df"))
-    // header moments: exact integers, divided here exactly like the
-    // standalone layout divides its _stats sidecar
-    val nD = lit(spec.nDocs).cast("double")
-    val avgdl = lit(spec.sumDl).cast("double") / nD
-    val tf = col("tf").cast("double")
-    val idf = log(lit(1.0) +
-      (nD - col("_df").cast("double") + lit(0.5)) /
-        (col("_df").cast("double") + lit(0.5)))
-    val contrib = idf * tf * lit(k1 + 1.0) /
-      (tf + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("dl").cast("double") / avgdl))
-    cand
-      .join(broadcast(dfs), "term")
-      .select(col(spec.idCol), contrib.as("_c"))
-      .groupBy(col(spec.idCol))
-      .agg(sum(col("_c")).as("bm25"))
-  }
-
-  /** Declare + build a PINNED POSITIONAL (phrase) index — the third
-    * index kind under the one-manifest pin: one row per token
-    * occurrence, term-bucket range-clustered for file-level probe
-    * pruning, no corpus-global sidecar (phrase adjacency is per-doc).
-    * Same maintenance/delete contracts as [[buildBm25Index]], minus
-    * the moments. Returns the committed version.
-    */
-  def buildPhraseIndex(
-      spark: SparkSession, root: String, name: String,
-      idCol: String, textCol: String, termBuckets: Int = 64,
-      buckets: Int = 8): Long = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"bad index name '$name'")
-    require(termBuckets > 0, s"termBuckets must be positive: $termBuckets")
-    val cur = latestSnapshot(spark, root)
-    require(!cur.headers.contains(s"index:$name"),
-      s"index '$name' already exists at $root")
-    val corpus = readVersion(spark, root, cur.version)
-    val spec = PhraseSpec(name, idCol, textCol, termBuckets)
-    val (entries, _) = idxEntriesFor(spark, root, Seq(spec), corpus, buckets)
-    if (!tryCommit(spark, root, cur.version + 1,
-        cur.headers + (s"index:$name" -> spec.headerValue),
-        entryLines(cur) ++ indexLines(cur) ++ dvLines(cur) ++
-          idxDvLines(cur) ++ entries))
-      throw new CommitConflict(
-        s"buildPhraseIndex at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
-  /** Exact phrase retrieval against the PINNED positional index
-    * (docs containing `phrase` as consecutive tokens, with occurrence
-    * counts — row-identical to [[graft.ingest.TextIndex.phraseDocs]]
-    * over the live corpus): prune index files by manifest `tb` stats,
-    * anti-join the index deletion vectors (a [[deleteWhere]]'d doc's
-    * occurrences stop matching in the SAME commit), then slot i
-    * anchors at pos − i and an n-term phrase is n−1 (id, anchor)
-    * equi-joins — all inputs posting-scale, never corpus-scale.
-    * `version < 0` means latest.
-    */
-  def phraseProbeIndexed(
-      spark: SparkSession, root: String, name: String,
-      phrase: Seq[String], version: Long = -1L): DataFrame = {
-    require(phrase.nonEmpty, "empty phrase")
-    val s =
-      if (version < 0L) latestSnapshot(spark, root)
-      else snapshot(spark, root, version)
-    val spec = indexSpecs(s).collectFirst {
-      case ph: PhraseSpec if ph.name == name => ph
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no positional index '$name' at $root"))
-    import spark.implicits._
-    val tbs = phrase.distinct.toDF("term")
-      .select(pmod(hash(col("term")), lit(spec.termBuckets)).as("tb"))
-      .distinct().as[Int].collect().toSeq
-    val files = prunedIndexFiles(s, name, tbs)
-    if (files.isEmpty)
-      return readIndexVersion(spark, root, name, s.version)
-        .select(col(spec.idCol), lit(0L).as("n_matches")).limit(0)
-    val pruned = antiJoinIndexDv(spark, root, s, spec,
-      spark.read.parquet(files.map(f => s"$root/$f"): _*)
-        .filter(col("tb").isin(tbs: _*) &&
-          col("term").isin(phrase.distinct: _*)))
-    val slots = phrase.zipWithIndex.map { case (t, i) =>
-      pruned.filter(col("term") === t)
-        .select(col(spec.idCol), (col("pos") - i).as("anchor"))
-    }
-    slots.reduce((a, b) => a.join(b, Seq(spec.idCol, "anchor")))
-      .groupBy(col(spec.idCol))
-      .agg(count(lit(1)).as("n_matches"))
-  }
-
-  /** Conjunctive (AND) retrieval against the PINNED BM25 postings —
-    * documents containing EVERY query term, with the summed term
-    * frequency ([[graft.ingest.TextIndex.conjunctiveDocs]]' contract
-    * over the pinned layout, DV-masked). One pruned scan, one per-doc
-    * aggregate.
-    */
-  def conjunctiveProbeIndexed(
-      spark: SparkSession, root: String, name: String,
-      terms: Seq[String], version: Long = -1L): DataFrame = {
-    require(terms.nonEmpty, "at least one query term required")
-    require(terms.toSet.size == terms.size, s"duplicate query terms: $terms")
-    val s =
-      if (version < 0L) latestSnapshot(spark, root)
-      else snapshot(spark, root, version)
-    val spec = indexSpecs(s).collectFirst {
-      case bm: Bm25Spec if bm.name == name => bm
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no BM25 index '$name' at $root"))
-    import spark.implicits._
-    val tbs = terms.toDF("term")
-      .select(pmod(hash(col("term")), lit(spec.termBuckets)).as("tb"))
-      .distinct().as[Int].collect().toSeq
-    val files = prunedIndexFiles(s, name, tbs)
-    if (files.isEmpty)
-      return readIndexVersion(spark, root, name, s.version)
-        .select(col(spec.idCol), lit(0L).as("tf_total")).limit(0)
-    antiJoinIndexDv(spark, root, s, spec,
-      spark.read.parquet(files.map(f => s"$root/$f"): _*)
-        .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*)))
-      .groupBy(col(spec.idCol))
-      .agg(count(lit(1)).as("_nt"), sum("tf").as("tf_total"))
-      .filter(col("_nt") === terms.size)
-      .select(col(spec.idCol), col("tf_total"))
-  }
-
-  /** Unpin an index: new version with its header and file lines
-    * removed (data files reclaimed by [[vacuum]] once no kept version
-    * references them). Read-modify-write conflict semantics.
-    */
-  def dropIndex(spark: SparkSession, root: String, name: String): Long = {
-    val cur = latestSnapshot(spark, root)
-    require(cur.headers.contains(s"index:$name"),
-      s"no index '$name' at $root")
-    if (!tryCommit(spark, root, cur.version + 1,
-        cur.headers - s"index:$name",
-        entryLines(cur) ++ indexLines(cur, except = Set(name)) ++
-          dvLines(cur) ++ idxDvLines(cur, except = Set(name))))
-      throw new CommitConflict(
-        s"dropIndex at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
-  /** The pinned index exactly as of the latest version. */
-  def readIndex(spark: SparkSession, root: String, name: String): DataFrame =
-    readIndexVersion(spark, root, name,
-      latestSnapshot(spark, root).version)
-
-  /** Time travel for the pinned index: the same manifest that names
-    * the corpus files of `version` names these index files, so this
-    * frame is consistent with [[readVersion]] at the same version BY
-    * CONSTRUCTION — the both-or-neither contract. Merge-on-read like
-    * the corpus: the version's per-index deletion vectors (deleted
-    * ids from [[deleteWhere]]) anti-join during the read.
-    */
-  def readIndexVersion(
-      spark: SparkSession, root: String, name: String,
-      version: Long): DataFrame = {
-    val s = snapshot(spark, root, version)
-    require(s.headers.contains(s"index:$name"),
-      s"no index '$name' at $root version $version")
-    val files = s.indexFiles.getOrElse(name, Seq.empty)
-    if (files.isEmpty)
-      throw new IllegalStateException(
-        s"TxTable $root index $name@$version: no data files")
-    val spec = indexSpecs(s).find(_.name == name).get
-    antiJoinIndexDv(spark, root, s, spec,
-      spark.read.parquet(files.map(f => s"$root/$f"): _*))
-  }
-
-  /** Apply an index's deletion vectors (deleted-ID files) to a frame
-    * of its rows: broadcast anti-join on the id column — the dv side
-    * is bounded by the table's accumulated delete count, KB–MB scale,
-    * so no index-scale shuffle ever happens.
-    */
-  private def antiJoinIndexDv(
-      spark: SparkSession, root: String, s: Snapshot, spec: IndexSpec,
-      rows: DataFrame): DataFrame =
-    s.indexDvFiles.get(spec.name).filter(_.nonEmpty) match {
-      case None => rows
-      case Some(dvf) =>
-        val ids = spark.read.parquet(dvf.map(f => s"$root/$f"): _*)
-          .select(col("id").as("_dv_id"))
-        rows.join(broadcast(ids),
-          rows(spec.idCol).cast("long") === col("_dv_id"), "left_anti")
-    }
-
-  /** Index files whose manifest [min,max] cell range overlaps any
-    * probed cell — exposed so specs can assert a probe's scan really
-    * shrank (the [[prunedFiles]] discipline on the index namespace).
-    */
-  def prunedIndexFiles(
-      s: Snapshot, name: String, cells: Seq[Int]): Seq[String] =
-    s.indexFiles.getOrElse(name, Seq.empty).filter { f =>
-      s.stats.get(f).flatMap(_.headOption).forall { case (mn, mx) =>
-        cells.exists(c => c >= mn && c <= mx)
-      }
-    }
-
-  /** IVF probe against the PINNED index: route via the sidecar, read
-    * only the files whose manifest cell range overlaps the probed
-    * cells (file-level skipping before any parquet footer opens), rank
-    * candidates by exact cosine — scoring identical to
-    * [[graft.ingest.AnnIndex.ivfTopK]], so probing all cells equals
-    * brute-force top-k bit for bit. `version < 0` means latest.
-    */
-  def ivfProbeIndexed(
-      spark: SparkSession, root: String, name: String,
-      queryVec: Array[Double], k: Int, nProbes: Int = 2,
-      excludeId: Option[Long] = None, version: Long = -1L): DataFrame = {
-    val s =
-      if (version < 0L) latestSnapshot(spark, root)
-      else snapshot(spark, root, version)
-    val spec = indexSpecs(s).collectFirst {
-      case iv: IvfSpec if iv.name == name => iv
-    }.getOrElse(
-      throw new IllegalArgumentException(
-        s"no IVF index '$name' at $root"))
-    val probes = loadCentroids(spark, root, spec)
-      .map { case (cell, c) =>
-        var d = 0.0; var i = 0
-        val n = math.min(c.length, queryVec.length)
-        while (i < n) { val t = c(i) - queryVec(i); d += t * t; i += 1 }
-        (cell, d)
-      }
-      .sortBy { case (cell, d) => (d, cell) }
-      .take(nProbes).map(_._1).toSeq
-    val files = prunedIndexFiles(s, name, probes)
-    if (files.isEmpty)
-      return readIndexVersion(spark, root, name, s.version)
-        .select(col(spec.idCol), lit(0.0d).as("sim")).limit(0)
-    val qLit = array(queryVec.toSeq.map(v => lit(v)): _*)
-    val candidates = antiJoinIndexDv(spark, root, s, spec,
-      spark.read
-        .parquet(files.map(f => s"$root/$f"): _*)
-        .filter(col("cell").isin(probes: _*)))
-    val withoutQuery = excludeId match {
-      case Some(id) => candidates.filter(col(spec.idCol) =!= id)
-      case None     => candidates
-    }
-    withoutQuery
-      .select(col(spec.idCol),
-        round(graft.operators.Similarity.cosineFast(
-          spark, col(spec.vecCol), qLit), 6).as("sim"))
-      .orderBy(col("sim").desc, col(spec.idCol))
-      .limit(k)
   }
 
   /** Drop data files referenced by NO kept version (the newest
@@ -2565,11 +1601,8 @@ object TxTable {
     val (drop, keep) = vs.splitAt(math.max(0, vs.size - keepVersions))
     val keptSnaps = keep.map(v => snapshot(spark, root, v))
     val live = keptSnaps
-      .flatMap(s => s.files ++ s.indexFiles.values.flatten ++ s.dvFiles ++
-        s.indexDvFiles.values.flatten ++ s.cdcFiles)
+      .flatMap(s => s.files ++ s.dvFiles ++ s.cdcFiles)
       .toSet
-    val liveSidecars =
-      keptSnaps.flatMap(s => indexSpecs(s).flatMap(_.sidecarOpt)).toSet
     val f = fs(spark, new Path(root))
     val horizon = System.currentTimeMillis() - retentionMs
     def sweepDir(nsRel: String): Unit = {
@@ -2577,14 +1610,12 @@ object TxTable {
       if (!f.exists(dir)) return
       f.listStatus(dir).foreach { sub =>
         val subRel = s"$nsRel/${sub.getPath.getName}"
-        if (!liveSidecars.contains(subRel)) {
-          val all = f.listStatus(sub.getPath).toSeq
-          val unreferenced =
-            all.forall(st => !live.contains(s"$subRel/${st.getPath.getName}"))
-          val pastRetention = sub.getModificationTime <= horizon &&
-            all.forall(_.getModificationTime <= horizon)
-          if (unreferenced && pastRetention) f.delete(sub.getPath, true)
-        }
+        val all = f.listStatus(sub.getPath).toSeq
+        val unreferenced =
+          all.forall(st => !live.contains(s"$subRel/${st.getPath.getName}"))
+        val pastRetention = sub.getModificationTime <= horizon &&
+          all.forall(_.getModificationTime <= horizon)
+        if (unreferenced && pastRetention) f.delete(sub.getPath, true)
       }
     }
     sweepDir("data")
@@ -2593,20 +1624,6 @@ object TxTable {
     // change-data dirs: referenced only by the one manifest that wrote
     // them, reclaimed once that version drops out of the kept window
     sweepDir("cdc")
-    // per-index deletion-vector namespaces: idxdv/<name>/ holds uuid dirs
-    val idxDvRoot = new Path(root, "idxdv")
-    if (f.exists(idxDvRoot))
-      f.listStatus(idxDvRoot).filter(_.isDirectory).foreach { nameDir =>
-        sweepDir(s"idxdv/${nameDir.getPath.getName}")
-      }
-    // pinned-index namespaces: each index/<name>/ holds data uuid dirs
-    // plus centroid sidecars; a sidecar survives while ANY kept
-    // manifest's header names it, data dirs by the same live-file rule
-    val idxRoot = new Path(root, "index")
-    if (f.exists(idxRoot))
-      f.listStatus(idxRoot).filter(_.isDirectory).foreach { nameDir =>
-        sweepDir(s"index/${nameDir.getPath.getName}")
-      }
     // temp manifests past retention are crash leftovers, never
     // in-flight (a commit writes and renames them within one call)
     val ld = logDir(root)

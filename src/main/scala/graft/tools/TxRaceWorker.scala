@@ -41,12 +41,6 @@ object TxRaceWorker {
   private def widx(workerId: String): Long =
     (workerId.hashCode.toLong & 0xffffL) + 1L
 
-  /** Deterministic 4-d payload vector for the indexed merge race —
-    * mirrored by TxRaceSpec's replay, so float equality is exact.
-    */
-  def vecFor(w: Long, i: Long, k: Long): Array[Float] =
-    Array(w.toFloat, i.toFloat, (k % 97L).toFloat, 1f)
-
   /** `readhold <root> <version> <signalFile>`: resolve a time-travel
     * frame at `version` (file list pinned NOW), announce it, wait for
     * the orchestrator's signal file (it vacuums meanwhile), then
@@ -112,39 +106,20 @@ object TxRaceWorker {
             TxTable.mergeInto(root,
               rows.toDF("k", "v", "_del"), "k", Seq("v"), "_del",
               maxRetries = 200)
-          case "mergeidx" =>
-            // the merge race over an INDEXED table: same key scheme as
-            // `merge`, but values are vectors and the table carries a
-            // pinned IVF index — every committed version must hold
-            // corpus and index both-or-neither (TxRaceSpec asserts the
-            // pin at EVERY version plus the serial replay)
-            val w = widx(workerId)
-            val rows = Seq(
-              (i.toLong % 5L, vecFor(w, i.toLong, i.toLong % 5L), false),
-              (1000L * w + i, vecFor(w, i.toLong, 1000L * w + i), false)) ++
-              (if (i >= 2)
-                 Seq((1000L * w + i - 2, Array.empty[Float], true))
-               else Nil)
-            TxTable.mergeInto(root,
-              rows.toDF("k", "vec", "_del"), "k", Seq("vec"), "_del",
-              maxRetries = 200)
-          case "dvdel" | "dvdelidx" =>
+          case "dvdel" =>
             // deletion-vector delete race: worker w's commit i
             // tombstones ITS OWN disjoint 10-key slice via deleteWhere
             // — racing DV commits must serialize like appends (each
             // retry re-reads the tip and re-scans), no slice lost, no
             // foreign slice touched. Key layout: w1 owns [0,500),
             // w2 owns [500,1000), slice i = base + [i*10, i*10+10).
-            // `dvdelidx` runs the identical slices against an INDEXED
-            // table (the orchestrator builds the pin and asserts
-            // corpus/index survivor agreement at every version).
             val base = if (workerId == "w1") 0L else 500L
             val lo = base + i * 10L
             TxTable.deleteWhere(spark, root,
               org.apache.spark.sql.functions.col("k").between(lo, lo + 9L),
               maxRetries = 200)
           case other =>
-            sys.error(s"unknown mode '$other' (append|merge|mergeidx|dvdel|dvdelidx)")
+            sys.error(s"unknown mode '$other' (append|merge|dvdel)")
         }
         // stdout is the race log the orchestrator asserts over
         println(s"[txrace] worker=$workerId seq=$i version=$v")

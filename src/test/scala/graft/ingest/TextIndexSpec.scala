@@ -9,7 +9,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-@annotation.nowarn("cat=deprecation") // the legacy append paths stay spec-locked
 class TextIndexSpec extends SparkSpec {
 
   import spark.implicits._

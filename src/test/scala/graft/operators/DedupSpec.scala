@@ -191,6 +191,12 @@ class DedupSpec extends SparkSpec {
     assert(mh.contains((7L, 8L)) && mh.contains((7L, 12L)))
   }
 
+  test("token-set cluster keys separate sets a linear fold merges") {
+    // k * 31 + h maps both sorted arrays to seed * 961 + 33
+    assert(Dedup.tokenSetKey(Array(1L, 2L)) != Dedup.tokenSetKey(Array(0L, 33L)))
+    assert(Dedup.tokenSetKey(Array(1L, 2L)) == Dedup.tokenSetKey(Array(1L, 2L)))
+  }
+
   test("prefix filtering is exact at a low threshold (long prefixes)") {
     // t = 0.5 makes prefixes > half of each token set — exercises the
     // prefix bound far from the high-threshold regime the gate uses

@@ -115,65 +115,6 @@ class TxRaceSpec extends SparkSpec {
         s"  only on disk: ${(got.toSet -- state.toSet).toSeq.sortBy(_._1)}\n" +
         s"  only in replay: ${(state.toSet -- got.toSet).toSeq.sortBy(_._1)}")
   }
-
-  test("two driver JVMs racing mergeInto over an INDEXED table: every " +
-    "version holds corpus+index both-or-neither; final = serial replay") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("graft-txmergeidx-").toString
-    TxTable.create(
-      (0L to 4L).map(k => (k, graft.tools.TxRaceWorker.vecFor(0L, -1L, k)))
-        .toDF("k", "vec"), root)
-    TxTable.buildIvfIndex(spark, root, "emb", "k", "vec",
-      numCentroids = 2, buckets = 2)
-
-    val perWorker = 4
-    val (p1, out1) = launchWorker(Seq("mergeidx", root, "w1", perWorker.toString))
-    val (p2, out2) = launchWorker(Seq("mergeidx", root, "w2", perWorker.toString))
-    val ex1 = p1.exitValue()
-    val ex2 = p2.exitValue()
-    assert(ex1 == 0, s"worker 1 failed:\n${out1.result().takeRight(2000)}")
-    assert(ex2 == 0, s"worker 2 failed:\n${out2.result().takeRight(2000)}")
-
-    val vs = TxTable.versions(spark, root)
-    assert(vs == (0L to (1L + 2L * perWorker)),
-      s"non-contiguous version history: $vs")
-
-    // the atomic-publish pin, at EVERY committed version with the
-    // index declared: corpus ids == index ids (no instant exists where
-    // a reader could pair corpus v with an index built on v-1)
-    (1L to vs.last).foreach { v =>
-      val corpusIds = TxTable.readVersion(spark, root, v)
-        .select("k").collect().map(_.getLong(0)).toSet
-      val indexIds = TxTable.readIndexVersion(spark, root, "emb", v)
-        .select("k").collect().map(_.getLong(0)).toSet
-      assert(corpusIds == indexIds,
-        s"v$v: corpus/index mismatch — only corpus ${corpusIds -- indexIds}," +
-          s" only index ${indexIds -- corpusIds}")
-    }
-
-    // serializability of the merges themselves (vector payloads)
-    val claims = claimedVersions(out1.result() + out2.result())
-    assert(claims.size == 2 * perWorker, s"claims: $claims")
-    val state = scala.collection.mutable.Map.empty[Long, Seq[Float]]
-    (0L to 4L).foreach(k =>
-      state(k) = graft.tools.TxRaceWorker.vecFor(0L, -1L, k).toSeq)
-    claims.sortBy(_._3).foreach { case (w, i, _) =>
-      val widx = (w.hashCode.toLong & 0xffffL) + 1L
-      state(i % 5L) = graft.tools.TxRaceWorker.vecFor(widx, i, i % 5L).toSeq
-      state(1000L * widx + i) =
-        graft.tools.TxRaceWorker.vecFor(widx, i, 1000L * widx + i).toSeq
-      if (i >= 2) state.remove(1000L * widx + i - 2)
-    }
-    val got = TxTable.read(spark, root).collect()
-      .map(r => r.getLong(r.fieldIndex("k")) ->
-        r.getAs[scala.collection.Seq[Float]](r.fieldIndex("vec")).toSeq)
-      .toMap
-    assert(got == state.toMap,
-      s"indexed-merge table diverged from the serial replay:\n" +
-        s"  only on disk: ${(got.keySet -- state.keySet).toSeq.sorted}\n" +
-        s"  only in replay: ${(state.keySet -- got.keySet).toSeq.sorted}")
-  }
 }
 
 object TxRaceSpec {

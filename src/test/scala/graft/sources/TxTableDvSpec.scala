@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Deletion-vector (merge-on-read) semantics of
   * [[TxTable.deleteWhere]]: logical deletes without data rewrites,
-  * materialization by the copy-on-write ops, vacuum GC, and the
-  * pinned-index exclusion.
+  * materialization by the copy-on-write ops, and vacuum GC.
   */
 class TxTableDvSpec extends SparkSpec {
 
@@ -185,106 +184,5 @@ class TxTableDvSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TxTable.versionAsOf(spark, root, betweenV0V1 - 3600000L)
     }
-  }
-
-  test("DV delete on an indexed table publishes corpus positions AND " +
-    "index deleted-ids in one commit (both-or-neither); probes and " +
-    "index reads exclude them, data/index files untouched") {
-    val root = Files.createTempDirectory("graft-dv-idx-").toString
-    val emb = (0L to 20L).map(i =>
-      (i, Array(i.toFloat, (i % 3).toFloat))).toDF("vec_id", "embedding")
-    TxTable.create(emb, root)
-    TxTable.buildIvfIndex(spark, root, "emb", "vec_id", "embedding",
-      numCentroids = 2, buckets = 2) // v1
-    val pre = TxTable.latestSnapshot(spark, root)
-    val v = TxTable.deleteWhere(spark, root, col("vec_id") % 5L === 1L) // v2
-    assert(v == 2L)
-    val post = TxTable.latestSnapshot(spark, root)
-
-    // zero rewrites: same data + index files; one dv + one idxdv entry
-    assert(post.files == pre.files)
-    assert(post.indexFiles == pre.indexFiles)
-    assert(post.dvFiles.nonEmpty)
-    assert(post.indexDvFiles.keySet == Set("emb"))
-
-    // corpus and index agree on the survivors — both-or-neither
-    val deleted = Set(1L, 6L, 11L, 16L)
-    assert(TxTable.read(spark, root)
-      .select("vec_id").collect().map(_.getLong(0)).toSet ==
-      (0L to 20L).toSet -- deleted)
-    assert(TxTable.readIndex(spark, root, "emb")
-      .select("vec_id").collect().map(_.getLong(0)).toSet ==
-      (0L to 20L).toSet -- deleted)
-
-    // probe-all equals brute force over the SURVIVING corpus
-    val q = Array(20.0, 2.0)
-    val got = TxTable.ivfProbeIndexed(spark, root, "emb", q, k = 5,
-      nProbes = 2).collect().map(_.getLong(0)).toSeq
-    val brute = TxTable.read(spark, root)
-      .select(col("vec_id"),
-        round(graft.operators.Similarity.cosineFast(spark, col("embedding"),
-          array(q.toSeq.map(org.apache.spark.sql.functions.lit): _*)), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(5)
-      .collect().map(_.getLong(0)).toSeq
-    assert(got == brute)
-    assert(!got.exists(deleted))
-
-    // the PRE-delete version still serves the full pair (time travel)
-    assert(TxTable.readIndexVersion(spark, root, "emb", 1L).count() == 21L)
-
-    // a later append carries the index DVs; a mergeInto materializes
-    // them (index rebuilt from the DV-aware corpus)
-    TxTable.append(
-      (21L to 25L).map(i => (i, Array(i.toFloat, (i % 3).toFloat)))
-        .toDF("vec_id", "embedding"), root) // v3
-    assert(TxTable.latestSnapshot(spark, root).indexDvFiles.nonEmpty)
-    assert(TxTable.readIndex(spark, root, "emb")
-      .select("vec_id").collect().map(_.getLong(0)).toSet ==
-      (0L to 25L).toSet -- deleted)
-    TxTable.mergeInto(root,
-      (0L to 25L).map(i => (i, Array(i.toFloat, (i % 3).toFloat), false))
-        .toDF("vec_id", "embedding", "dead")
-        .filter(col("vec_id") === 2L),
-      "vec_id", Seq("embedding"), "dead") // v4: rewrite
-    val merged = TxTable.latestSnapshot(spark, root)
-    assert(merged.dvFiles.isEmpty && merged.indexDvFiles.isEmpty)
-    assert(TxTable.readIndex(spark, root, "emb")
-      .select("vec_id").collect().map(_.getLong(0)).toSet ==
-      (0L to 25L).toSet -- deleted)
-  }
-
-  test("appending an id masked by an index deletion vector is " +
-    "rejected (by-value DVs cannot tell old row from new); " +
-    "mergeInto is the sanctioned re-ingest path") {
-    val root = Files.createTempDirectory("graft-dv-idx-reins-").toString
-    val emb = (0L to 20L).map(i =>
-      (i, Array(i.toFloat, (i % 3).toFloat))).toDF("vec_id", "embedding")
-    TxTable.create(emb, root)
-    TxTable.buildIvfIndex(spark, root, "emb", "vec_id", "embedding",
-      numCentroids = 2, buckets = 2)
-    TxTable.deleteWhere(spark, root, col("vec_id") === 5L)
-    // re-inserting the masked id must abort before any commit
-    intercept[IllegalArgumentException] {
-      TxTable.append(
-        Seq((5L, Array(9f, 9f))).toDF("vec_id", "embedding"), root)
-    }
-    // fresh ids still append normally
-    TxTable.append(
-      Seq((21L, Array(21f, 0f))).toDF("vec_id", "embedding"), root)
-    // mergeInto re-ingests the id: DVs materialize, index rebuilt,
-    // corpus and index agree and serve the NEW vector exactly once
-    TxTable.mergeInto(root,
-      Seq((5L, Array(9f, 9f), false)).toDF("vec_id", "embedding", "dead"),
-      "vec_id", Seq("embedding"), "dead")
-    val snap = TxTable.latestSnapshot(spark, root)
-    assert(snap.dvFiles.isEmpty && snap.indexDvFiles.isEmpty)
-    val corpus5 = TxTable.read(spark, root).filter(col("vec_id") === 5L)
-      .select("embedding").collect()
-    val index5 = TxTable.readIndex(spark, root, "emb")
-      .filter(col("vec_id") === 5L).select("embedding").collect()
-    assert(corpus5.length == 1 && index5.length == 1)
-    assert(corpus5.head.getAs[Seq[Float]](0) === Seq(9f, 9f))
-    assert(index5.head.getAs[Seq[Float]](0) === Seq(9f, 9f))
   }
 }

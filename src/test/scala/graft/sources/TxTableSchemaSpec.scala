@@ -237,7 +237,7 @@ class TxTableSchemaSpec extends SparkSpec {
     assert(TxTable.read(spark, root).columns.toSeq === Seq("key", "v"))
   }
 
-  test("renameColumn guards: collision, missing column, indexed column") {
+  test("renameColumn guards: collision, missing column") {
     val root = Files.createTempDirectory("graft-rename-g-").toString
     TxTable.create(narrow, root)
     intercept[IllegalArgumentException] {
@@ -246,12 +246,6 @@ class TxTableSchemaSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TxTable.renameColumn(spark, root, "nope", "x")
     }
-    // an index-routing column cannot rename out from under its index
-    TxTable.buildBm25Index(spark, root, "txt", "k", "v", termBuckets = 4)
-    val ex = intercept[IllegalArgumentException] {
-      TxTable.renameColumn(spark, root, "v", "text")
-    }
-    assert(ex.getMessage.contains("pinned index"))
   }
 
   test("dropColumn retires the physical name: reads stop projecting, " +

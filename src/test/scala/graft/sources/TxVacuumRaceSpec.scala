@@ -119,62 +119,4 @@ class TxVacuumRaceSpec extends SparkSpec {
     assert(counts == (0 to 2 * perWorker).map(1000L - 10L * _),
       s"per-version counts: $counts")
   }
-
-  test("two driver JVMs racing deleteWhere on an INDEXED table: " +
-    "corpus and index agree on survivors at every committed version") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("graft-dvidxrace-").toString
-    TxTable.create(
-      (0L until 1000L).map(k =>
-        (k, Array(k.toFloat, (k % 7L).toFloat, 1f)))
-        .toDF("k", "vec").repartition(4), root)
-    TxTable.buildIvfIndex(spark, root, "emb", "k", "vec",
-      numCentroids = 2, buckets = 2) // v1
-
-    val perWorker = 3
-    val (p1, out1) = launchWorker(
-      Seq("dvdelidx", root, "w1", perWorker.toString))
-    val (p2, out2) = launchWorker(
-      Seq("dvdelidx", root, "w2", perWorker.toString))
-    assert(p1.exitValue() == 0,
-      s"worker 1 failed:\n${out1.result().takeRight(2000)}")
-    assert(p2.exitValue() == 0,
-      s"worker 2 failed:\n${out2.result().takeRight(2000)}")
-
-    val vs = TxTable.versions(spark, root)
-    assert(vs == (0L to (1L + 2L * perWorker)),
-      s"non-contiguous version history: $vs")
-
-    // the union of both workers' slices is gone from BOTH faces
-    val deleted = (0 until perWorker).flatMap { i =>
-      (i * 10L until i * 10L + 10L) ++
-        (500L + i * 10L until 500L + i * 10L + 10L)
-    }.toSet
-    val live = TxTable.read(spark, root).select("k")
-      .as[Long].collect().toSet
-    assert(live == (0L until 1000L).toSet -- deleted)
-
-    // both-or-neither under race: at EVERY committed version the
-    // pinned index serves exactly the corpus's surviving ids
-    vs.drop(1).foreach { v => // v0 predates the index
-      val corpusIds = TxTable.readVersion(spark, root, v)
-        .select("k").as[Long].collect().toSet
-      val indexIds = TxTable.readIndexVersion(spark, root, "emb", v)
-        .select("k").as[Long].collect().toSet
-      assert(indexIds == corpusIds,
-        s"v$v: index/corpus disagree — " +
-          s"onlyIndex=${(indexIds -- corpusIds).toSeq.sorted.take(10)} " +
-          s"onlyCorpus=${(corpusIds -- indexIds).toSeq.sorted.take(10)}")
-    }
-
-    // no lost-race staged idxdv dir leaked into any manifest: every
-    // referenced idxdv file exists, and per-version DV state is
-    // monotone one-commit-per-delete
-    val allIdxDv = vs.drop(1).flatMap(v =>
-      TxTable.snapshot(spark, root, v).indexDvFiles.values.flatten)
-    allIdxDv.foreach { f =>
-      assert(Files.exists(Paths.get(root, f)), s"missing idxdv file $f")
-    }
-  }
 }
