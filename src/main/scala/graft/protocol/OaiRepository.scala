@@ -114,9 +114,9 @@ final class OaiRepository(
   def identify(): String = {
     // earliest datestamp computed from the corpus (min header datestamp,
     // incl. deletion times); epoch fallback for an empty store
-    val earliest = store.studies
-      .agg(org.apache.spark.sql.functions.min(FormatColumns.headerDatestamp))
-      .collect().headOption.map(_.getTimestamp(0)).filter(_ != null)
+    val earliest = Collect.rows(store.studies
+      .agg(org.apache.spark.sql.functions.min(FormatColumns.headerDatestamp)))
+      .headOption.map(_.getTimestamp(0)).filter(_ != null)
       .map(OaiXml.isoDate).getOrElse("1970-01-01T00:00:00Z")
     respond(Some("Identify"), Map.empty,
       <Identify>
@@ -184,12 +184,12 @@ final class OaiRepository(
     val fields =
       (fmt.recordFields ++ FormatColumns.headerFields ++ sets.flatMap(_.fields)).distinct
     val filter = And(FilterDsl.byIdentifier(identifier), fmt.validFilter)
-    val row = store.studies
+    val row = Collect.rows(store.studies
       .filter(filter.toColumn)
       .select(fields.map(org.apache.spark.sql.functions.col): _*)
       .transform(df => FormatColumns.withHeader(df, sets))
       .transform(fmt.derive)
-      .limit(1).collect().headOption
+      .limit(1)).headOption
       .getOrElse(throw OaiError("idDoesNotExist", identifier))
     respond(Some("GetRecord"),
       Map("identifier" -> identifier, "metadataPrefix" -> metadataPrefix),
@@ -197,8 +197,8 @@ final class OaiRepository(
   }
 
   /** ListRecords / ListIdentifiers (SURVEY.md §3.2): conjunctive filter
-    * (datestamp window + set filter + format validity), count-then-page
-    * with keyset resumption tokens.
+    * (datestamp window + set filter + format validity), keyset-paged with
+    * resumption tokens: page, then count only when the first page is full.
     */
   def list(verb: String, params: Map[String, String]): String = {
     val token = params.get("resumptionToken").map(ResumptionToken.decode)

@@ -59,10 +59,13 @@ object ResumptionToken {
         require(i > 0)
         kv.take(i) -> java.net.URLDecoder.decode(kv.drop(i + 1), UTF_8)
       }.toMap
-      ResumptionToken(parts(0), parts(4), parts(1).toLong, parts(2).toLong, args)
+      val t = ResumptionToken(parts(0), parts(4), parts(1).toLong, parts(2).toLong, args)
+      // issued only while the list is unfinished: other progress is forged
+      require(0 < t.cursor && t.cursor < t.completeListSize)
+      t
     } catch {
       case _: Exception =>
-        throw OaiError("badResumptionToken", s"cannot parse '$token'")
+        throw OaiError("badResumptionToken", s"not a token this repository issued: '$token'")
     }
 
   def fingerprint(parts: String*): String =
@@ -124,9 +127,8 @@ final class StudyStore(val studies: DataFrame) extends HarvestStore {
     val aggs = flags.map { case (name, f) =>
       max(when(f.toColumn, lit(1)).otherwise(lit(0))).as(name)
     }
-    val row = studies.filter(filter.toColumn)
-      .agg(count(lit(1)).as("_matched"), aggs: _*)
-      .collect().head
+    val row = Collect.rows(studies.filter(filter.toColumn)
+      .agg(count(lit(1)).as("_matched"), aggs: _*)).head
     if (row.getLong(0) == 0L) None
     else Some(flags.map(_._1).zipWithIndex.collect {
       case (name, i) if row.getInt(i + 1) == 1 => name
@@ -138,6 +140,10 @@ final class StudyStore(val studies: DataFrame) extends HarvestStore {
     * `derive` runs AFTER the page limit: per-record transforms only touch
     * `listSize` rows, not the whole corpus — mirroring the reference's
     * `_on_record` post-processing of streamed rows.
+    *
+    * The page runs first; `completeListSize` is counted only when a first
+    * page comes back full. A shorter first page is the whole list: `derive`
+    * adds columns and never drops rows, and `studies` is one fixed frame.
     */
   override def queryPage(
       filter: Filter,
@@ -153,8 +159,6 @@ final class StudyStore(val studies: DataFrame) extends HarvestStore {
         throw OaiError("badResumptionToken", "token does not match this query")
     }
     val base = studies.filter(filter.toColumn)
-    val completeListSize =
-      token.map(_.completeListSize).getOrElse(base.count())
     val afterCursor = token match {
       case Some(t) => base.filter(col(Key) > t.lastKey)
       case None    => base
@@ -164,7 +168,12 @@ final class StudyStore(val studies: DataFrame) extends HarvestStore {
       .select(proj: _*)
       .orderBy(col(Key))
       .limit(listSize)
-    val rows = derive(pageDf).collect().toSeq
+    val rows = Collect.rows(derive(pageDf))
+    val completeListSize = token match {
+      case Some(t)                      => t.completeListSize
+      case None if rows.size < listSize => rows.size.toLong
+      case None                         => base.count()
+    }
 
     val served = token.map(_.cursor).getOrElse(0L) + rows.size
     val next =

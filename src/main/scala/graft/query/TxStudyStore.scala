@@ -71,9 +71,12 @@ final class TxStudyStore(spark: SparkSession, root: String)
       tokenArgs: Map[String, String]): Page = {
     val version = token match {
       case Some(t) =>
-        t.args.getOrElse(VersionArg,
+        val pinned = t.args.getOrElse(VersionArg,
           throw OaiError("badResumptionToken",
-            "token carries no pinned snapshot version")).toLong
+            "token carries no pinned snapshot version"))
+        pinned.toLongOption.getOrElse(
+          throw OaiError("badResumptionToken",
+            s"pinned snapshot version '$pinned' is not a number"))
       case None =>
         val vs = TxTable.versions(spark, root)
         require(vs.nonEmpty, s"$root is not a TxTable (no versions)")
@@ -86,6 +89,9 @@ final class TxStudyStore(spark: SparkSession, root: String)
           throw OaiError("badResumptionToken",
             s"harvest snapshot v$version expired: swept by vacuum " +
               "retention — restart the harvest from the beginning")
+        case _: TxTable.MissingVersionException =>
+          throw OaiError("badResumptionToken",
+            s"harvest snapshot v$version was never committed")
       }
     new StudyStore(studies).queryPage(
       filter, fields, listSize, token, filterFingerprint, derive,

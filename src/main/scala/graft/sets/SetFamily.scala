@@ -53,12 +53,10 @@ object LanguageSet extends SetFamily {
   val fields = Seq("study_titles")
 
   def enumerate(df: DataFrame): Seq[SetInfo] =
-    df.select(explode(col("study_titles.lang")).as("lang"))
+    Collect.rows(df.select(explode(col("study_titles.lang")).as("lang"))
       .where(col("lang").isNotNull)
-      .distinct().orderBy("lang")
-      .collect()
+      .distinct().orderBy("lang"))
       .map(r => SetInfo(s"$prefix:${r.getString(0)}", s"Language ${r.getString(0)}"))
-      .toSeq
 
   def labels: Column =
     array_distinct(filter(

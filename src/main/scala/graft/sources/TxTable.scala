@@ -153,6 +153,12 @@ object TxTable {
   final class VacuumedVersionException(msg: String)
     extends IllegalStateException(msg)
 
+  /** A read anchored on a version that was never committed: above the
+    * latest, or on a path that holds no table.
+    */
+  final class MissingVersionException(msg: String, cause: Throwable)
+    extends IllegalArgumentException(msg, cause)
+
   def snapshot(spark: SparkSession, root: String, version: Long): Snapshot = {
     val p = manifestPath(root, version)
     val f = fs(spark, p)
@@ -166,7 +172,7 @@ object TxTable {
               s"${vs.min}; re-anchor the read there (change consumers: " +
               s"restart with fromVersion >= ${vs.min}, or reconcile via " +
               "the Merkle snapshot diff)")
-        else throw new IllegalArgumentException(
+        else throw new MissingVersionException(
           s"TxTable $root: no committed version $version" +
             (if (vs.isEmpty) " (not a TxTable?)"
              else s" (latest is ${vs.max})"), e)

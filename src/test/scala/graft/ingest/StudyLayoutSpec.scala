@@ -2,15 +2,11 @@ package graft.ingest
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
-
-import graft.{Fixtures, SparkSpec}
+import graft.{Fixtures, JobProbe, SparkSpec}
 import graft.protocol.{OaiConfig, OaiRepository}
 import graft.query.StudyStore
 import graft.schema.{RecordStatus, Study}
 import graft.sets.{ConfigurableSet, LanguageSet, OpenAireSet, SourceSet}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 
 import scala.xml.XML
@@ -71,42 +67,6 @@ class StudyLayoutSpec extends SparkSpec {
         ConfigurableSet.fromYaml(Fixtures.configurableYaml)),
       OaiConfig(listSize = 7),
       now = () => Fixtures.ts("2022-01-01T00:00:00Z"))
-
-  /** Input records read by the Spark jobs `body` submits on this thread. */
-  private def recordsReadBy(body: => Unit): Long = {
-    val sc = spark.sparkContext
-    val tagKey = "graft.test.probe"
-    val probe = java.util.UUID.randomUUID().toString
-    val fence = probe + "-fence"
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val fenceJobs = ConcurrentHashMap.newKeySet[Int]()
-    val read = new AtomicLong
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tagKey)).orNull match {
-          case `probe` => e.stageIds.foreach(stages.add(_))
-          case `fence` => fenceJobs.add(e.jobId)
-          case _       =>
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (fenceJobs.contains(e.jobId)) fenced.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tagKey, probe)
-      try body finally sc.setLocalProperty(tagKey, null)
-      // a listener sees events in posting order, so once the fence job's
-      // end arrives, every task of `body` has been counted
-      sc.setLocalProperty(tagKey, fence)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tagKey, null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the fence job")
-    } finally sc.removeSparkListener(listener)
-    read.get
-  }
 
   test("ingest materializes _direct_base_url from first direct provenance") {
     val raw = rawOf(Fixtures.all)
@@ -203,8 +163,8 @@ class StudyLayoutSpec extends SparkSpec {
     assert(largest < corpus.size)
     val repo = repoOver(spark.read.parquet(multiFileDir))
     for (id <- Seq("study-005", "study-058", "study-003")) {
-      val read = recordsReadBy(repo.handle(
-        Map("verb" -> "GetRecord", "identifier" -> id, "metadataPrefix" -> "oai_dc")))
+      val read = JobProbe(spark)(repo.handle(
+        Map("verb" -> "GetRecord", "identifier" -> id, "metadataPrefix" -> "oai_dc"))).recordsRead
       assert(read > 0 && read <= largest, s"$id read $read records, largest file $largest")
     }
   }

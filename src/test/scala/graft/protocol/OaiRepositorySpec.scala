@@ -1,7 +1,7 @@
 package graft.protocol
 
 import graft.{Fixtures, SparkSpec}
-import graft.query.StudyStore
+import graft.query.{ResumptionToken, StudyStore}
 import graft.sets.{ConfigurableSet, LanguageSet, OpenAireSet, SourceSet}
 
 import scala.xml.XML
@@ -279,6 +279,26 @@ class OaiRepositorySpec extends SparkSpec {
       Map("verb" -> "ListRecords", "metadataPrefix" -> "oai_dc",
         "resumptionToken" -> "garbage!!!")))
     assert((xml \ "error" \ "@code").text == "badResumptionToken")
+  }
+
+  test("a token with impossible progress → badResumptionToken") {
+    val p1 = XML.loadString(repo.handle(
+      Map("verb" -> "ListIdentifiers", "metadataPrefix" -> "oai_dc")))
+    val issued = ResumptionToken.decode(
+      (p1 \ "ListIdentifiers" \ "resumptionToken").text)
+    assert(issued.cursor == 2 && issued.completeListSize == 5)
+    // an edited completeListSize at or below the cursor would otherwise
+    // end the harvest early, without any error
+    val forged = Seq(
+      issued.copy(completeListSize = issued.cursor),
+      issued.copy(completeListSize = 1),
+      issued.copy(cursor = 0),
+      issued.copy(cursor = -3))
+    forged.foreach { t =>
+      val xml = XML.loadString(repo.handle(
+        Map("verb" -> "ListIdentifiers", "resumptionToken" -> t.encode)))
+      assert((xml \ "error" \ "@code").text == "badResumptionToken", t)
+    }
   }
 
   test("ListRecords with set + until filters") {

@@ -117,4 +117,21 @@ class TxStudyStoreSpec extends SparkSpec {
     }
     assert(e2.code == "badResumptionToken")
   }
+
+  test("a forged pinned version, not a number or never committed, is " +
+    "badResumptionToken") {
+    val root = tempRoot()
+    TxTable.create(keyed(1L to 5L), root)
+    TxTable.append(keyed(Seq(6L)), root)
+    val store = new TxStudyStore(spark, root)
+    val issued = store.queryPage(True, Seq("doc_id", "text"), 3, None, fp).token.get
+    assert(issued.args("txv") == "1")
+    for (txv <- Seq("one", "", "2", "99")) {
+      val forged = issued.copy(args = issued.args + ("txv" -> txv))
+      val e = intercept[OaiError] {
+        store.queryPage(True, Seq("doc_id", "text"), 3, Some(forged), fp)
+      }
+      assert(e.code == "badResumptionToken", txv)
+    }
+  }
 }
