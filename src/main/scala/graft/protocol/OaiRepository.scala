@@ -1,6 +1,7 @@
 package graft.protocol
 
 import java.sql.Timestamp
+import java.time.{Instant, LocalDate, ZoneOffset}
 
 import graft.formats.{FormatColumns, MetadataFormat, MetadataFormats}
 import graft.query._
@@ -301,23 +302,23 @@ final class OaiRepository(
     OaiXml.record(headerOf(r), metadata, about, deleted)
   }
 
+  /** A date-only argument is a UTC day, like every datestamp the
+    * repository renders ([[OaiXml]] `IsoFmt`), never the JVM's zone.
+    */
   private def parseDate(s: String): Timestamp =
-    try {
-      if (s.length == 10) Timestamp.valueOf(s + " 00:00:00")
-      else Timestamp.from(java.time.Instant.parse(s))
-    } catch {
-      case _: Exception => throw OaiError("badArgument", s"bad date '$s'")
-    }
+    parseStamp(s, _.atStartOfDay(ZoneOffset.UTC).toInstant)
 
   /** A date-granularity `until` bounds the WHOLE day (OAI-PMH §3.3.1 —
     * `until=2024-01-15` with the repository's second granularity means
     * `<= 2024-01-15T23:59:59Z`, not midnight-exclusive).
     */
   private def parseUntil(s: String): Timestamp =
-    if (s.length == 10)
-      try Timestamp.valueOf(s + " 23:59:59")
-      catch {
-        case _: Exception => throw OaiError("badArgument", s"bad date '$s'")
-      }
-    else parseDate(s)
+    parseStamp(s, _.atTime(23, 59, 59).toInstant(ZoneOffset.UTC))
+
+  private def parseStamp(s: String, day: LocalDate => Instant): Timestamp =
+    try Timestamp.from(
+      if (s.length == 10) day(LocalDate.parse(s)) else Instant.parse(s))
+    catch {
+      case _: Exception => throw OaiError("badArgument", s"bad date '$s'")
+    }
 }

@@ -6879,67 +6879,6 @@ object IoQueries extends QueryGroup {
       """SELECT event_id, event_type, value FROM events
         |ORDER BY event_id""".stripMargin))
 
-  /** CHECK constraint enforcement ([[graft.sources.TxTable
-    * .setCheckConstraint]] / header `check=`): the gate ITSELF drives
-    * the rejection path — a batch with negated ids must abort
-    * wholesale (all-or-nothing: its valid rows don't land either),
-    * then the honest batch commits. Full oracle: the final table is
-    * exactly the clean corpus, which is only true if the guard both
-    * fired and stayed atomic.
-    */
-  val txCheckGate: QueryDef = QueryDef(
-    "io_tx_check_constraint",
-    (s, dir) => {
-      val ev = Tables(s, dir).events.select("event_id", "value")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txcheck-").toString
-      graft.sources.TxTable.create(ev.filter(col("event_id") % 2 === 0),
-        root, check = Some("event_id >= 0"))
-      val rejected =
-        try {
-          graft.sources.TxTable.append(
-            ev.filter(col("event_id") % 2 === 1)
-              .withColumn("event_id", -col("event_id")), root)
-          false
-        } catch { case _: IllegalArgumentException => true }
-      require(rejected, "CHECK constraint failed to reject the bad batch")
-      graft.sources.TxTable.append(ev.filter(col("event_id") % 2 === 1), root)
-      graft.sources.TxTable.read(s, root).orderBy("event_id")
-    },
-    Some(
-      """SELECT event_id, value FROM events ORDER BY event_id""".stripMargin))
-
-  /** RECLUSTER / OPTIMIZE-ZORDER ([[graft.sources.TxTable.recluster]],
-    * round 14): a range-clustered table picks up a second hot
-    * predicate column, DV-deletes some rows, then MIGRATES to z-order
-    * clustering in one commit — the rewrite must materialize the DVs
-    * (deleted rows stay gone) and the new 2-D stats must serve
-    * [[graft.sources.TxTable.readBox]] exactly. Full oracle: box +
-    * delete predicates restate in SQL; TxTableSpec asserts the
-    * file-level pruning side.
-    */
-  val txRecluster: QueryDef = QueryDef(
-    "io_tx_recluster",
-    (s, dir) => {
-      val ev = Tables(s, dir).events
-        .select("event_id", "user_id", "value")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txreclus-").toString
-      graft.sources.TxTable.create(ev, root,
-        clusterCol = Some("event_id"), buckets = 4)
-      graft.sources.TxTable.deleteWhere(s, root, col("user_id") % 9 === 4)
-      graft.sources.TxTable.recluster(s, root,
-        Seq("event_id", "user_id"), buckets = 8)
-      graft.sources.TxTable.readBox(s, root, 101L, 900L, 10L, 60L)
-        .orderBy("event_id")
-    },
-    Some(
-      """SELECT event_id, user_id, value FROM events
-        |WHERE event_id BETWEEN 101 AND 900
-        |  AND user_id BETWEEN 10 AND 60
-        |  AND user_id % 9 <> 4
-        |ORDER BY event_id""".stripMargin))
-
   /** Schema evolution ([[graft.sources.TxTable]] `schema=` header,
     * round 14): the gate drives BOTH edges — a wider batch is
     * REJECTED by the strict default (before any file lands), then
@@ -6972,141 +6911,6 @@ object IoQueries extends QueryGroup {
         |  CASE WHEN event_id % 2 = 1 THEN event_type ELSE NULL END
         |    AS event_type
         |FROM events ORDER BY event_id""".stripMargin))
-
-  /** Column RENAME via column mapping ([[graft.sources.TxTable
-    * .renameColumn]], round 15): a pure metadata commit — the declared
-    * field takes the new logical name, its metadata pins the PHYSICAL
-    * name the bytes live under, and ZERO data files are rewritten (the
-    * gate asserts the file set is unchanged across the rename). Reads
-    * resolve BY PHYSICAL NAME across three generations — files written
-    * before the rename, after it under the new logical name, and a
-    * post-rename DV delete predicated ON the renamed column — while a
-    * strict append still carrying the OLD name is rejected. Full
-    * oracle: the union of generations, the rename, and the delete all
-    * restate in SQL.
-    */
-  val txSchemaRename: QueryDef = QueryDef(
-    "io_tx_schema_rename",
-    (s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text", "lang")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txrename-").toString
-      graft.sources.TxTable.create(
-        docs.filter(col("doc_id") % 2 === 0), root) // v0: gen-1 "lang"
-      graft.sources.TxTable.append(
-        docs.filter(col("doc_id") % 2 === 1), root) // v1: gen-2 "lang"
-      val before = graft.sources.TxTable.latestSnapshot(s, root).files.toSet
-      graft.sources.TxTable.renameColumn(s, root, "lang", "language") // v2
-      require(graft.sources.TxTable.latestSnapshot(s, root).files.toSet
-        == before, "rename rewrote data files")
-      val rejected =
-        try { graft.sources.TxTable.append(docs.limit(5), root); false }
-        catch { case _: IllegalArgumentException => true }
-      require(rejected, "append under the OLD column name was admitted")
-      // gen-3: new rows under the NEW logical name (shifted ids keep
-      // the oracle deterministic)
-      graft.sources.TxTable.append(
-        docs.filter(col("doc_id") % 2 === 1)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-            col("lang").as("language")), root) // v3
-      // a delete PREDICATED on the renamed column, across generations
-      graft.sources.TxTable.deleteWhere(s, root, col("language") === "de")
-      graft.sources.TxTable.read(s, root)
-        .select("doc_id", "language")
-        .orderBy("doc_id")
-    },
-    Some(
-      """SELECT doc_id, lang AS language FROM (
-        |  SELECT doc_id, lang FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, lang FROM documents
-        |  WHERE doc_id % 2 = 1)
-        |WHERE lang <> 'de'
-        |ORDER BY doc_id""".stripMargin))
-
-  /** CDC ACROSS A RENAME ([[graft.sources.TxTable.readChangesTyped]]
-    * × column mapping, round 16): a long-lived incremental consumer —
-    * the reference's selective-harvest model
-    * (`/root/reference/tests/test_serve.py:1342`) — reads ONE change
-    * range that spans a `renameColumn` commit. The feed resolves
-    * fields by PHYSICAL name, so rows from BOTH generations surface
-    * under the NEW logical name with their original values: pre-rename
-    * inserts, the metadata-only rename itself (contributes no events),
-    * post-rename inserts, and a DV delete predicated on the renamed
-    * column whose positions resolve across both file generations.
-    * Full oracle: generation routing, the rename, and the delete all
-    * restate in SQL.
-    */
-  val txChangesAcrossRename: QueryDef = QueryDef(
-    "io_tx_changes_across_rename",
-    (s, dir) => {
-      val docs = Tables(s, dir).documents.select("doc_id", "text", "lang")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-cdcrename-").toString
-      graft.sources.TxTable.create(
-        docs.filter(col("doc_id") % 3 === 0), root)                // v0
-      graft.sources.TxTable.append(
-        docs.filter(col("doc_id") % 3 === 1), root)                // v1
-      graft.sources.TxTable.renameColumn(s, root, "lang", "language") // v2
-      graft.sources.TxTable.append(
-        docs.filter(col("doc_id") % 3 === 2)
-          .withColumnRenamed("lang", "language"), root)            // v3
-      graft.sources.TxTable.deleteWhere(s, root,
-        col("language") === "de")                                  // v4
-      graft.sources.TxTable.readChangesTyped(s, root, 0L, 4L)
-        .select("doc_id", "language", "_change_type", "_commit_version")
-        .orderBy("_commit_version", "_change_type", "doc_id")
-    },
-    Some(
-      """SELECT * FROM (
-        |  SELECT doc_id, lang AS language, 'insert' AS "_change_type",
-        |    (CASE WHEN doc_id % 3 = 1 THEN 1 ELSE 3 END)::BIGINT
-        |      AS "_commit_version"
-        |  FROM documents WHERE doc_id % 3 <> 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, 'delete', 4 FROM documents
-        |  WHERE lang = 'de')
-        |ORDER BY "_commit_version", "_change_type", doc_id""".stripMargin))
-
-  /** CDC ACROSS A DROP ([[graft.sources.TxTable.readChangesTyped]] ×
-    * [[graft.sources.TxTable.dropColumn]], round 16): the feed serves
-    * every change range under the DESTINATION version's declared
-    * schema, so a column dropped inside the range LEAVES the feed —
-    * pre-drop generations' insert events exclude it rather than
-    * resurrect its bytes (the gate asserts the feed's exact column
-    * set). Full oracle: both generations restate narrow in SQL.
-    */
-  val txChangesAcrossDrop: QueryDef = QueryDef(
-    "io_tx_changes_across_drop",
-    (s, dir) => {
-      val ev = Tables(s, dir).events
-        .select("event_id", "value", "event_type")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-cdcdrop-").toString
-      graft.sources.TxTable.create(
-        ev.filter(col("event_id") % 2 === 0), root)                // v0
-      graft.sources.TxTable.append(
-        ev.filter(col("event_id") % 2 === 1), root)                // v1
-      graft.sources.TxTable.dropColumn(s, root, "event_type")      // v2
-      graft.sources.TxTable.append(
-        ev.filter(col("event_id") % 2 === 1)
-          .select((col("event_id") + 10000000L).as("event_id"),
-            col("value")), root)                                   // v3
-      val feed = graft.sources.TxTable.readChangesTyped(s, root, 0L, 3L)
-      require(feed.columns.toSeq ==
-        Seq("event_id", "value", "_change_type", "_commit_version"),
-        s"dropped column resurfaced in the feed: ${feed.columns.toSeq}")
-      feed.orderBy("_commit_version", "event_id")
-    },
-    Some(
-      """SELECT * FROM (
-        |  SELECT event_id, value, 'insert' AS "_change_type",
-        |    1::BIGINT AS "_commit_version"
-        |  FROM events WHERE event_id % 2 = 1
-        |  UNION ALL
-        |  SELECT event_id + 10000000, value, 'insert', 3
-        |  FROM events WHERE event_id % 2 = 1)
-        |ORDER BY "_commit_version", event_id""".stripMargin))
 
   /** VACUUM vs a slow CDC consumer ([[graft.sources.TxTable.vacuum]]
     * × [[graft.sources.TxTable.readChangesTyped]], round 16): vacuum
@@ -8125,34 +7929,6 @@ object IoQueries extends QueryGroup {
       """SELECT doc_id, text, lang FROM documents
         |ORDER BY doc_id""".stripMargin))
 
-  /** 2-D box read over a Z-ORDER-clustered TxTable
-    * ([[graft.sources.TxTable.createClustered]] with two cluster
-    * columns → Morton-curve file layout, per-file min/max of BOTH
-    * columns in the manifest; [[graft.sources.TxTable.readBox]] prunes
-    * on both before any parquet footer opens). The oracle is the plain
-    * two-predicate BETWEEN — the hash proves multi-dimension file
-    * skipping never changes an answer; TxTableSpec separately pins
-    * that the box actually touches fewer files than either dimension
-    * alone.
-    */
-  val txtableZorderBox: QueryDef = QueryDef(
-    "io_txtable_zorder_box",
-    (s, dir) => {
-      val d = Tables(s, dir).documents
-        .select("doc_id", "n_chars", "text", "lang")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-txtable-zbox-").toString
-      graft.sources.TxTable.createClustered(
-        d, root, Seq("doc_id", "n_chars"), buckets = 16)
-      graft.sources.TxTable.readBox(s, root, 100L, 1400L, 100L, 200L)
-        .orderBy("doc_id")
-    },
-    Some(
-      """SELECT doc_id, n_chars, text, lang FROM documents
-        |WHERE doc_id BETWEEN 100 AND 1400
-        |  AND n_chars BETWEEN 100 AND 200
-        |ORDER BY doc_id""".stripMargin))
-
   /** Incremental small-file compaction
     * ([[graft.sources.TxTable.autoCompact]]): the clustered table
     * accretes four closed-form single-file appends (the per-batch
@@ -8168,8 +7944,8 @@ object IoQueries extends QueryGroup {
       val d = Tables(s, dir).documents.select("doc_id", "text", "lang")
       val root = java.nio.file.Files
         .createTempDirectory("graft-txtable-autoc-").toString
-      graft.sources.TxTable.createClustered(
-        d.filter(col("doc_id") % 5 =!= 0), root, Seq("doc_id"),
+      graft.sources.TxTable.create(
+        d.filter(col("doc_id") % 5 =!= 0), root, clusterCol = Some("doc_id"),
         buckets = 1)
       (0L until 4L).foreach { k =>
         graft.sources.TxTable.append(
@@ -8484,13 +8260,12 @@ object IoQueries extends QueryGroup {
     Seq(jsonlRoundTrip, csvRoundTrip, warcExtract, warcHttpExtract,
       urlCanonicalize, urlFrontier, zorderValues, orcRoundTrip,
       avroRoundTrip, bloomSkipping, txDeleteDv, txRestore, txLifecycle,
-      txCheckGate, txSchemaEvolution, txRecluster,
+      txSchemaEvolution,
       domainStats, partitionPrune, xmlRecords, mergeUpsert,
       mergeUpsertAcid, oaiLoop, txtableSkipping, txtableCompact,
-      txtableZorderBox, txtableAutoCompact, txtableTimeTravel,
+      txtableAutoCompact, txtableTimeTravel,
       txtableChanges, txChangeStreamGate, cdcDedupGate, cdcDedupDeleteGate,
-      cdcDedupUpdateGate, txChangesTyped, txSchemaRename,
-      txChangesAcrossRename, txChangesAcrossDrop, txVacuumCdcBoundary,
+      cdcDedupUpdateGate, txChangesTyped, txVacuumCdcBoundary,
       txCdcReplicate, txCdcReplicateDv, txMirrorVacuumResume,
       txSnapshotHarvest,
       profileDrift,

@@ -20,8 +20,8 @@ import scala.jdk.CollectionConverters._
   *    mask via the deletion-vector path: small batches inline the
   *    keys as an `In(key, …)` predicate (pushes to parquet, so a
   *    key-clustered replica opens only overlapping row groups), and
-  *    batches past `spark.graft.replicate.maxInlineDeleteKeys`
-  *    (default 10k) switch to [[TxTable.deleteKeys]]'s broadcast
+  *    batches past [[MaxInlineDeleteKeys]] (10k) switch to
+  *    [[TxTable.deleteKeys]]'s broadcast
   *    semi-join so the plan never carries 10⁵ literal nodes. Either
   *    way: a KB-scale position write, zero data-file rewrites;
   *  - `insert` + `update_postimage` events APPEND — work bounded by
@@ -51,6 +51,11 @@ import scala.jdk.CollectionConverters._
   */
 object TxReplicate {
 
+  /** The most delete keys a batch inlines as an `In` literal list;
+    * larger batches mask through [[TxTable.deleteKeys]].
+    */
+  private[graft] val MaxInlineDeleteKeys = 10000
+
   /** Apply ONE typed event batch (the `readChangesTyped` shape) to
     * the replica at `root`, exactly once under `(streamId, batchId)`
     * (use the source version as the batch id). Returns the number of
@@ -63,7 +68,7 @@ object TxReplicate {
       .headers.get(s"stream:$streamId").map(_.toLong)
     if (applied.exists(_ >= batchId)) return 0
     // Delete-key mask, thresholded on batch size: up to
-    // `maxInlineDeleteKeys` the keys inline as an `In` literal list
+    // `MaxInlineDeleteKeys` the keys inline as an `In` literal list
     // (which pushes to parquet stats, so a key-clustered replica opens
     // only overlapping row groups); above it — a retention-window
     // catch-up batch can carry 10⁵+ keys, and that many literals blow
@@ -77,9 +82,6 @@ object TxReplicate {
     // route through the incremental-take executor, which re-runs that
     // subtree per size escalation — measured 4 s → 20 s on the
     // replicate gate before this was caught.
-    val maxInline = spark.conf
-      .getOption("spark.graft.replicate.maxInlineDeleteKeys")
-      .map(_.toInt).getOrElse(10000)
     val goneDf = events
       .filter(col("_change_type").isin("delete", "update_preimage"))
       .select(col(keyCol)).distinct()
@@ -89,7 +91,7 @@ object TxReplicate {
       .drop("_change_type", "_commit_version")
     var commits = 0
     if (gone.nonEmpty) {
-      if (gone.size <= maxInline)
+      if (gone.size <= MaxInlineDeleteKeys)
         TxTable.deleteWhere(spark, root, col(keyCol).isInCollection(gone))
       else
         TxTable.deleteKeys(spark, root, keyCol, spark.createDataFrame(

@@ -27,17 +27,16 @@ import org.apache.spark.sql.functions._
   * A manifest lists the COMPLETE active file set of its version (no
   * log replay needed to resolve a snapshot — one file read). Line
   * format: `version=N` first; then `key=value` table headers carried
-  * forward commit-to-commit (`cluster=<col>[,<col2>]` declares the
-  * clustering column(s) — one column = range clustering, two =
-  * z-order layout via [[graft.ingest.ZOrder]]; `schema=<json>` the
-  * declared table schema every writer validates against and every
-  * reader scans by (see the schema-evolution section);
-  * `stream:<id>=<batchId>`
-  * records the last committed batch per streaming source); then one
-  * line per data file — `data/<uuid>/<name>` optionally followed by
-  * TAB-separated min/max per cluster column (in declaration order),
-  * the file-skipping statistics that let [[readRange]] and [[readBox]]
-  * prune whole files before any parquet footer is opened.
+  * forward commit-to-commit (`cluster=<col>` declares the one integral
+  * range-clustering column; `schema=<json>` the declared table schema
+  * every writer validates against and every reader scans by (see the
+  * schema-evolution section); `cdc=true` the change feed;
+  * `stream:<id>=<batchId>` records the last committed batch per
+  * streaming source); then one line per data file —
+  * `data/<uuid>/<name>` optionally followed by the TAB-separated
+  * min/max of the cluster column, the file-skipping statistics that
+  * let [[readRange]] and [[deleteRange]] prune whole files before any
+  * parquet footer is opened.
   *
   * Commit protocol: write new data files under a fresh uuid dir
   * (invisible to every reader — readers only open files named by a
@@ -54,10 +53,11 @@ import org.apache.spark.sql.functions._
   *     construction (they add files to whatever the latest manifest
   *     says) — on a lost race they re-read the new latest and retry,
   *     bounded.
-  *   - [[overwrite]] / [[compact]]: read-modify-write — a lost race
-  *     means the snapshot the result was derived from is stale, so
-  *     they FAIL with a conflict (caller re-runs on the new snapshot);
-  *     retrying silently would lose the interleaved commit's rows.
+  *   - [[compact]] / [[autoCompact]]: read-modify-write — a lost
+  *     race means the snapshot the result was derived from is stale,
+  *     so they FAIL with a conflict (caller re-runs on the new
+  *     snapshot); retrying silently would lose the interleaved
+  *     commit's rows.
   *   - [[mergeInto]]: read-modify-write with OPTIONAL optimistic
   *     retry (`maxRetries > 0`): a lost race RE-READS the latest
   *     snapshot and RE-RUNS the whole merge against it before
@@ -79,27 +79,20 @@ import org.apache.spark.sql.functions._
 object TxTable {
 
   /** One resolved version: `files` are root-relative paths, `stats`
-    * maps a file to (min, max) per cluster column where recorded (one
-    * pair per declared cluster column, in declaration order),
-    * `headers` carries the table metadata (`cluster`, `schema`,
-    * `check`, `cdc`, `stream:<id>`), `dvFiles` the deletion-vector
+    * maps a file to the (min, max) of the cluster column where
+    * recorded, `headers` carries the table metadata (`cluster`,
+    * `schema`, `cdc`, `stream:<id>`), `dvFiles` the deletion-vector
     * position files of [[deleteWhere]] commits, and `cdcFiles` the
     * change files THIS version's change-feed [[mergeInto]] wrote.
     */
   final case class Snapshot(
       version: Long, files: Seq[String],
-      stats: Map[String, Seq[(Long, Long)]],
+      stats: Map[String, (Long, Long)],
       headers: Map[String, String],
       dvFiles: Seq[String] = Seq.empty,
       cdcFiles: Seq[String] = Seq.empty) {
-    /** Declared cluster columns: empty (unclustered), one (range
-      * clustering), or two (z-order clustering — both columns carry
-      * file stats, so range predicates on EITHER prune files).
-      */
-    def clusterCols: Seq[String] =
-      headers.get("cluster").toSeq.flatMap(_.split(",").toSeq)
-        .map(_.trim).filter(_.nonEmpty)
-    def clusterCol: Option[String] = clusterCols.headOption
+    /** The declared range-clustering column, if any. */
+    def clusterCol: Option[String] = headers.get("cluster")
     /** The version's declared table schema (header `schema=<json>`,
       * written by [[create]] since round 14) — what makes reads
       * deterministic across files written by different-width commits:
@@ -205,13 +198,9 @@ object TxTable {
     }.toMap
     val entries = fileLines.map(_.split("\t").toSeq)
     val files = entries.map(_.head)
-    // path alone = no stats; path + 2k fields = k (min,max) pairs,
-    // one per cluster column in declaration order
+    // path alone = no stats; path + min + max = the cluster column's span
     val stats = entries.collect {
-      case e if e.size >= 3 && e.size % 2 == 1 =>
-        e.head -> e.tail.grouped(2).map {
-          case Seq(mn, mx) => (mn.toLong, mx.toLong)
-        }.toSeq
+      case Seq(f, mn, mx) => f -> (mn.toLong, mx.toLong)
     }.toMap
     Snapshot(version, files, stats, headers,
       dvEntryLines.map(_.split("\t").head),
@@ -236,28 +225,6 @@ object TxTable {
     val s = snapshot(spark, root, version)
     readFiles(spark, root, s.files, s.dvFiles, s.tableSchema)
   }
-
-  /** The newest version committed AT OR BEFORE `tsMillis` (manifest
-    * modification times are the commit clock — the rename that
-    * publishes a version stamps its mtime). Fails for a timestamp
-    * before the table existed; [[vacuum]]-dropped versions are
-    * naturally unreachable (their manifests are gone).
-    */
-  def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Long = {
-    val f = fs(spark, logDir(root))
-    val eligible = versions(spark, root).filter { v =>
-      f.getFileStatus(manifestPath(root, v)).getModificationTime <= tsMillis
-    }
-    require(eligible.nonEmpty,
-      s"$root has no version committed at or before $tsMillis")
-    eligible.max
-  }
-
-  /** Timestamp time travel (the `TIMESTAMP AS OF` face): the table as
-    * of the newest commit ≤ `tsMillis`.
-    */
-  def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
-    readVersion(spark, root, versionAsOf(spark, root, tsMillis))
 
   /** Change-data feed for APPEND-STYLE commits: the rows added by
     * versions (fromVersion, toVersion] — exactly the files present in
@@ -298,12 +265,8 @@ object TxTable {
     * version WITHOUT a cdc channel (compact/restore/feed-less merge)
     * fails with the same guidance as the stream. All generations are
     * served under the DESTINATION version's declared schema,
-    * physical-name-resolved (column mapping): a column ADDED inside
-    * the range reads null from files that predate it; a column
-    * RENAMED inside the range serves both generations under the new
-    * logical name; a column DROPPED inside the range is EXCLUDED from
-    * every event — its bytes stay in the old files but leave the feed
-    * (gated by `io_tx_changes_across_{rename,drop}`).
+    * physical-name-resolved (the reserved-name mapping): a column
+    * ADDED inside the range reads null from files that predate it.
     */
   def readChangesTyped(
       spark: SparkSession, root: String,
@@ -399,8 +362,7 @@ object TxTable {
       // its writer knew; surface the emptiness explicitly
       throw new IllegalStateException(s"TxTable $root: no data files")
     // column mapping: the scan resolves files by PHYSICAL name, the
-    // final projection restores logical names — a rename never touches
-    // a data byte
+    // final projection restores logical names
     val mapped = schema.exists(hasMapping)
     val reader = schema.map(physicalSchema)
       .fold(spark.read)(spark.read.schema)
@@ -431,133 +393,66 @@ object TxTable {
     }
   }
 
-  /** Key-range read with FILE-LEVEL skipping on the FIRST cluster
-    * column: only files whose manifest [min,max] overlaps [lo,hi] are
-    * opened (a file with no recorded stats is conservatively read).
-    * The row filter is still applied, so the result is exact whether
-    * or not stats exist — stats only shrink the scan, never the
-    * answer.
+  /** Key-range read with FILE-LEVEL skipping on the cluster column:
+    * only files whose manifest [min,max] overlaps [lo,hi] are opened
+    * (a file with no recorded stats is conservatively read). The row
+    * filter is still applied, so the result is exact whether or not
+    * stats exist — stats only shrink the scan, never the answer.
     */
-  /** The cluster header records the column's PHYSICAL name (the name
-    * the file stats were computed under); resolve it back to the
-    * logical name a caller-facing frame serves — identity without a
-    * mapping.
-    */
-  private def logicalClusterCol(s: Snapshot, c: String): String =
-    s.tableSchema.flatMap(_.fields.find(f =>
-      physicalName(f).equalsIgnoreCase(c)).map(_.name)).getOrElse(c)
-
   def readRange(
       spark: SparkSession, root: String, lo: Long, hi: Long): DataFrame = {
     val s = latestSnapshot(spark, root)
     val c = s.clusterCol.getOrElse(throw new IllegalArgumentException(
       s"TxTable $root has no cluster column; readRange needs one"))
-    readFiles(spark, root, prunedFiles(s, 0, lo, hi), s.dvFiles,
-        s.tableSchema)
-      .filter(col(logicalClusterCol(s, c)).between(lo, hi))
+    readFiles(spark, root, prunedFiles(s, lo, hi), s.dvFiles, s.tableSchema)
+      .filter(col(c).between(lo, hi))
   }
 
-  /** 2-D box read over a z-order-clustered table: files are pruned by
-    * BOTH columns' manifest stats (a z-clustered file covers a compact
-    * Morton segment, i.e. a tight bounding box in each dimension, so a
-    * box predicate skips ~√-fraction of files per dimension instead of
-    * pruning on one and scanning all of the other). Exact regardless
-    * of stats — the row filter still applies.
-    */
-  def readBox(
-      spark: SparkSession, root: String, loA: Long, hiA: Long,
-      loB: Long, hiB: Long): DataFrame = {
-    val s = latestSnapshot(spark, root)
-    val cs = s.clusterCols
-    require(cs.size == 2,
-      s"TxTable $root has cluster columns $cs; readBox needs exactly 2")
-    val pruned = prunedFiles(s, 0, loA, hiA)
-      .intersect(prunedFiles(s, 1, loB, hiB))
-    readFiles(spark, root, pruned, s.dvFiles, s.tableSchema)
-      .filter(col(logicalClusterCol(s, cs.head)).between(loA, hiA) &&
-        col(logicalClusterCol(s, cs(1))).between(loB, hiB))
-  }
-
-  /** The post-skipping file list for [lo,hi] on cluster column `idx` —
+  /** The post-skipping file list for [lo,hi] on the cluster column —
     * exposed so callers and specs can assert how much of the table a
     * range touches.
     */
-  def prunedFiles(s: Snapshot, idx: Int, lo: Long, hi: Long): Seq[String] =
+  def prunedFiles(s: Snapshot, lo: Long, hi: Long): Seq[String] =
     s.files.filter { f =>
-      s.stats.get(f).flatMap(_.lift(idx)).forall {
-        case (mn, mx) => mx >= lo && mn <= hi
-      }
+      s.stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
 
-  /** [[prunedFiles]] on the first cluster column. */
-  def prunedFiles(s: Snapshot, lo: Long, hi: Long): Seq[String] =
-    prunedFiles(s, 0, lo, hi)
-
   /** Write `df`'s rows as new immutable data files; returns manifest
-    * entries (path, optional per-cluster-column stats). One cluster
-    * column range-repartitions the frame so each file holds a
-    * contiguous key span — that is what makes the min/max entries
-    * selective instead of all-overlapping. Two cluster columns lay the
-    * frame out along the Morton curve ([[graft.ingest.ZOrder]]) so
-    * each file is a tight bounding box in BOTH dimensions and either
-    * column's stats prune. Per-file stats come from ONE aggregate over
+    * entries (path, optional cluster-column stats). A cluster column
+    * range-repartitions the frame so each file holds a contiguous key
+    * span — that is what makes the min/max entries selective instead
+    * of all-overlapping. Per-file stats come from ONE aggregate over
     * the just-written files.
     */
   private def writeDataFiles(
-      df: DataFrame, root: String, cluster: Seq[String],
+      df: DataFrame, root: String, cluster: Option[String],
       buckets: Int): Seq[String] = {
     val sub = s"data/${UUID.randomUUID()}"
     val dest = new Path(root, sub)
-    val toWrite = cluster match {
-      case Seq()  => df
-      case Seq(c) => df.repartitionByRange(buckets, col(c))
-      case Seq(a, b) =>
-        graft.ingest.ZOrder.zValue(df, a, b)
-          .repartitionByRange(buckets, col("z"))
-          .sortWithinPartitions(col("z"))
-          .drop("z")
-      case cs => throw new IllegalArgumentException(
-        s"TxTable supports at most 2 cluster columns, got $cs")
-    }
-    toWrite.write.parquet(dest.toString)
+    cluster.fold(df)(c => df.repartitionByRange(buckets, col(c)))
+      .write.parquet(dest.toString)
     val f = fs(df.sparkSession, dest)
     val names = f.listStatus(dest).toSeq
       .map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_"))
       .sorted
-    if (cluster.isEmpty) names.map(n => s"$sub/$n")
-    else {
-      val spark = df.sparkSession
-      val keyed = spark.read.parquet(dest.toString)
-        .select(input_file_name().as("_f") +:
-          cluster.zipWithIndex.map { case (c, i) =>
-            col(c).cast("long").as(s"_k$i") }: _*)
-      val aggExprs = cluster.indices.flatMap(i => Seq(
-        min(col(s"_k$i")).as(s"_mn$i"),
-        max(col(s"_k$i")).as(s"_mx$i")))
-      val stats = keyed
-        .groupBy(col("_f"))
-        .agg(aggExprs.head, aggExprs.tail: _*)
-        .collect()
-        .flatMap { r =>
+    cluster match {
+      case None => names.map(n => s"$sub/$n")
+      case Some(c) =>
+        val stats = df.sparkSession.read.parquet(dest.toString)
+          .select(input_file_name().as("_f"), col(c).cast("long").as("_k"))
+          .groupBy(col("_f"))
+          .agg(min(col("_k")), max(col("_k")))
+          .collect()
           // an all-null (or non-castable) cluster column leaves
           // min/max null: emit the file WITHOUT stats — the
           // conservative always-read path — instead of an NPE
           // mid-write with data files already on disk
-          if ((1 until 1 + 2 * cluster.size).exists(r.isNullAt)) None
-          else Some((new Path(r.getString(0)).getName,
-            cluster.indices.map(i =>
-              (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))))
-        }
-        .toMap
-      names.map { n =>
-        stats.get(n) match {
-          case Some(pairs) =>
-            (s"$sub/$n" +: pairs.flatMap { case (mn, mx) =>
-              Seq(mn.toString, mx.toString) }).mkString("\t")
-          case None => s"$sub/$n" // empty file: no stats
-        }
-      }
+          .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+          .map(r => new Path(r.getString(0)).getName ->
+            s"${r.getLong(1)}\t${r.getLong(2)}")
+          .toMap
+        names.map(n => stats.get(n).fold(s"$sub/$n")(st => s"$sub/$n\t$st"))
     }
   }
 
@@ -599,12 +494,7 @@ object TxTable {
   }
 
   private def lineFor(s: Snapshot, f: String): String =
-    s.stats.get(f) match {
-      case Some(pairs) =>
-        (f +: pairs.flatMap { case (mn, mx) =>
-          Seq(mn.toString, mx.toString) }).mkString("\t")
-      case None => f
-    }
+    s.stats.get(f).fold(f) { case (mn, mx) => s"$f\t$mn\t$mx" }
 
   // existing stats lines must survive a commit that re-lists old files
   private def entryLines(s: Snapshot): Seq[String] =
@@ -612,23 +502,6 @@ object TxTable {
 
   /** Deletion-vector lines carried verbatim (no stats). */
   private def dvLines(s: Snapshot): Seq[String] = s.dvFiles
-
-  /** Enforce the table's CHECK constraint (header `check=<sql expr>`)
-    * on a batch of incoming rows BEFORE any file is written — SQL
-    * standard semantics: a row violates only when the predicate is
-    * FALSE (NULL passes). One batch-scale pass; the table itself is
-    * never rescanned (rows already in the table passed at their own
-    * write). Violations fail the WHOLE commit with a count — partial
-    * writes would break the manifest's all-or-nothing story.
-    */
-  private def enforceCheck(
-      df: DataFrame, headers: Map[String, String], op: String): Unit =
-    headers.get("check").foreach { sql =>
-      val bad = df.filter(!coalesce(expr(sql), lit(true))).count()
-      if (bad > 0)
-        throw new IllegalArgumentException(
-          s"$op: $bad row(s) violate CHECK ($sql); commit aborted")
-    }
 
   // ------------------------------------------------- schema evolution
   //
@@ -647,18 +520,14 @@ object TxTable {
 
   // -------------------------------------------------- column mapping
   //
-  // RENAME/DROP without rewriting a byte (Delta's column mapping,
-  // re-derived): the declared schema's field METADATA carries each
-  // column's PHYSICAL name — the name its bytes sit under in every
-  // parquet file ever written. A rename is a pure header commit (the
-  // logical name changes, physName pins the old one); reads scan BY
-  // PHYSICAL name and alias back to logical; writes rename
-  // logical→physical before any file lands, so mixed-generation
-  // tables stay by-name consistent. A dropped column's physical name
-  // is retired in the `dropped` header, and schema evolution refuses
-  // to ADD a column whose name matches any live or retired physical
-  // name — re-using it would resurrect old files' bytes under the new
-  // column.
+  // The declared schema's field METADATA may carry a column's PHYSICAL
+  // name — the name its bytes sit under in every parquet file. Only a
+  // reserved top-level name gets one ([[reserveMapped]]: `_metadata`
+  // is stored as `_gm_metadata`). Reads scan BY PHYSICAL name and
+  // alias back to logical; writes rename logical→physical before any
+  // file lands. Schema evolution refuses to ADD a column whose name
+  // matches a live physical name — the by-physical-name scan would
+  // serve the mapped column's bytes under the new column.
 
   /** Top-level-field metadata key holding the column's physical
     * (on-file) name; absent = physical equals logical.
@@ -666,7 +535,7 @@ object TxTable {
   private val PhysNameKey = "physName"
 
   /** The parquet-file field name a declared column's bytes live
-    * under — its logical name until a rename pins the original.
+    * under — its logical name unless [[reserveMapped]] pinned another.
     */
   private[graft] def physicalName(f: StructField): String =
     if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey)
@@ -705,8 +574,8 @@ object TxTable {
 
   /** Keep ONLY the column-mapping key through normalization — other
     * source-supplied field metadata is noise a schema header must not
-    * memorialize, but losing physName would sever every renamed
-    * column from its bytes.
+    * memorialize, but losing physName would sever a mapped column
+    * from its bytes.
     */
   private def keepPhys(m: Metadata): Metadata =
     if (m.contains(PhysNameKey))
@@ -736,9 +605,8 @@ object TxTable {
     * (Spark's default), so a case-duplicate schema header fails every
     * subsequent read — a table bricked at birth instead of rejected
     * before the first file lands. Applied by [[checkSchema]] for
-    * append batches and directly by [[createClustered]]/[[overwrite]]
-    * (whose frames BECOME the declared schema without passing through
-    * checkSchema).
+    * append batches and directly by [[create]] (whose frame BECOMES
+    * the declared schema without passing through checkSchema).
     */
   private def requireNoCaseDuplicates(st: StructType, op: String): Unit = {
     val dupes = st.fields
@@ -790,21 +658,16 @@ object TxTable {
     } else if (extra.isEmpty) headers
     else {
       // resurrection guard (column mapping): an added column whose
-      // name matches a RENAMED column's physical name — or a DROPPED
-      // column's retired one — would serve old files' bytes as the
-      // new column's values through the by-physical-name scan
+      // name matches a mapped column's physical name would serve that
+      // column's bytes as its values through the by-physical-name scan
       val physTaken = declared.fields.map(f => key(physicalName(f))).toSet
-      val retired = headers.get("dropped").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
-      val clash = extra.filter(f =>
-        physTaken.contains(key(f.name)) || retired.contains(key(f.name)))
+      val clash = extra.filter(f => physTaken.contains(key(f.name)))
       require(clash.isEmpty,
         s"$op: cannot add column(s) ${clash.map(_.name).mkString(",")} — " +
-          "the name matches a renamed or dropped column's PHYSICAL " +
-          "name; old files' bytes would resurrect under it (pick a " +
-          "different name)")
+          "the name matches a mapped column's PHYSICAL name; its bytes " +
+          "would resurrect under it (pick a different name)")
       // an ADDED reserved name gets its physical mapping here, like
-      // create/overwrite give one at schema establishment
+      // create gives one at schema establishment
       headers + ("schema" ->
         reserveMapped(StructType(declared.fields ++ extra)).json)
     }
@@ -819,9 +682,9 @@ object TxTable {
     * writes therefore pin a PHYSICAL on-file name for any reserved
     * top-level name through the existing column-mapping machinery:
     * bytes land under `_gm_metadata`, reads alias back to the logical
-    * name like any renamed column, and the hidden metadata column
-    * stays reachable. Mapped-already fields (a rename) are left
-    * alone; the candidate name steps until free.
+    * name, and the hidden metadata column stays reachable.
+    * Mapped-already fields are left alone; the candidate name steps
+    * until free.
     */
   private val ReservedNames = Set("_metadata")
 
@@ -842,119 +705,6 @@ object TxTable {
   private def schemaHeaderFor(df: DataFrame): (String, String) =
     "schema" -> reserveMapped(normSchema(df.schema)).json
 
-  /** Resolve the table's CHECK constraint (if any) against a
-    * PROSPECTIVE schema — ANALYSIS ONLY, no job: a rename/drop that
-    * would leave the CHECK referencing a gone column is rejected IN
-    * THE SAME CALL instead of bricking every later append with an
-    * unresolved-attribute error until [[setCheckConstraint]].
-    */
-  private def validateCheckAgainst(
-      spark: SparkSession, st: StructType,
-      headers: Map[String, String], op: String): Unit =
-    headers.get("check").foreach { sql =>
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-      try empty.filter(expr(sql)).queryExecution.analyzed
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"$op: CHECK ($sql) no longer resolves against the new " +
-              s"schema ${st.simpleString} — update it with " +
-              "setCheckConstraint (or dropCheckConstraint) first", e)
-      }
-    }
-
-  /** RENAME a column as a PURE METADATA COMMIT — zero data rewrites
-    * (Delta's column mapping, re-derived): the declared field takes
-    * the new logical name and its metadata pins the PHYSICAL name its
-    * bytes have always lived under, so files written before and after
-    * the rename keep resolving by one physical name while every read
-    * serves the new logical one. The old name is gone from the
-    * declared schema: reads of it fail, strict appends carrying it
-    * are rejected, and `mergeSchema` refuses to re-add any name that
-    * matches a live physical name (the resurrection guard). At 100 TB
-    * this turns a rename from a table-scale rewrite into one KB-scale
-    * manifest write.
-    *
-    * Caller contract: a CHECK constraint referencing the column must
-    * be dropped/updated first — the CHECK SQL is analysis-resolved
-    * against the post-rename schema ([[validateCheckAgainst]]), so a
-    * breaking rename fails in THIS call instead of bricking later
-    * appends. Read-modify-write conflict semantics. Returns the new
-    * version.
-    */
-  def renameColumn(
-      spark: SparkSession, root: String, oldName: String,
-      newName: String): Long = {
-    require(newName.nonEmpty && !newName.contains("\n") &&
-      !newName.contains("\t"),
-      s"renameColumn at $root: bad new column name '$newName'")
-    val cur = latestSnapshot(spark, root)
-    val st = cur.tableSchema.getOrElse(throw new IllegalArgumentException(
-      s"renameColumn at $root: legacy table without a declared schema " +
-        "header (recreate or overwrite to declare one)"))
-    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    val idx = st.fields.indexWhere(f => key(f.name) == key(oldName))
-    require(idx >= 0, s"renameColumn at $root: no column '$oldName'")
-    require(!st.fields.zipWithIndex.exists { case (f, i) =>
-      i != idx && key(f.name) == key(newName) },
-      s"renameColumn at $root: column '$newName' already exists")
-    val f = st.fields(idx)
-    val nf = StructField(newName, f.dataType, f.nullable,
-      new MetadataBuilder()
-        .putString(PhysNameKey, physicalName(f)).build())
-    val ns = StructType(st.fields.updated(idx, nf))
-    validateCheckAgainst(spark, ns, cur.headers,
-      s"renameColumn at $root ('$oldName' -> '$newName')")
-    if (!tryCommit(spark, root, cur.version + 1,
-        cur.headers + ("schema" -> normSchema(ns).json),
-        entryLines(cur) ++ dvLines(cur)))
-      throw new CommitConflict(
-        s"renameColumn at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
-  /** DROP a column as a pure metadata commit (zero rewrites): the
-    * field leaves the declared schema — every read stops projecting
-    * it — and its PHYSICAL name is retired in the `dropped` header so
-    * schema evolution can never re-admit a column that would serve
-    * the old bytes ([[checkSchema]]'s resurrection guard). The bytes
-    * themselves stay in the files (merge-on-read economics; a
-    * [[compact]]/[[recluster]] rewrite physically sheds them, since
-    * the rewrite projects the declared schema). Same caller contract
-    * as [[renameColumn]] for CHECK constraints; cluster
-    * columns are additionally rejected (file stats and range reads
-    * key on them — [[recluster]] away first). Returns the new version.
-    */
-  def dropColumn(
-      spark: SparkSession, root: String, name: String): Long = {
-    val cur = latestSnapshot(spark, root)
-    val st = cur.tableSchema.getOrElse(throw new IllegalArgumentException(
-      s"dropColumn at $root: legacy table without a declared schema header"))
-    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    val idx = st.fields.indexWhere(f => key(f.name) == key(name))
-    require(idx >= 0, s"dropColumn at $root: no column '$name'")
-    require(st.fields.length > 1,
-      s"dropColumn at $root: cannot drop the last column")
-    val phys = physicalName(st.fields(idx))
-    require(!cur.clusterCols.exists(c => key(c) == key(phys)),
-      s"dropColumn at $root: '$name' is a cluster column — recluster " +
-        "to a different layout first")
-    val ns = StructType(st.fields.patch(idx, Nil, 1))
-    validateCheckAgainst(spark, ns, cur.headers,
-      s"dropColumn at $root ('$name')")
-    val retired = (cur.headers.get("dropped").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) :+ key(phys))
-      .distinct.mkString(",")
-    if (!tryCommit(spark, root, cur.version + 1,
-        cur.headers + ("schema" -> normSchema(ns).json)
-          + ("dropped" -> retired),
-        entryLines(cur) ++ dvLines(cur)))
-      throw new CommitConflict(
-        s"dropColumn at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
   /** Create a new table at `root` (version 0). `clusterCol` (integral)
     * enables range-clustered files + manifest min/max stats on every
     * subsequent write; `buckets` bounds files per commit. Fails if a
@@ -962,31 +712,14 @@ object TxTable {
     */
   def create(
       df: DataFrame, root: String, clusterCol: Option[String] = None,
-      buckets: Int = 8, check: Option[String] = None): Long =
-    createClustered(df, root, clusterCol.toSeq, buckets, check)
-
-  /** Create with explicit cluster columns: 0 (unclustered), 1 (range
-    * clustering), or 2 (z-order — every write lays files along the
-    * Morton curve and records BOTH columns' min/max, so [[readRange]]
-    * on either and [[readBox]] on both prune at the file level).
-    */
-  def createClustered(
-      df: DataFrame, root: String, clusterCols: Seq[String],
-      buckets: Int = 8, check: Option[String] = None): Long = {
+      buckets: Int = 8): Long = {
     require(versions(df.sparkSession, root).isEmpty,
       s"TxTable already exists at $root")
-    require(clusterCols.size <= 2,
-      s"TxTable supports at most 2 cluster columns, got $clusterCols")
-    val headers0 = check.map(c => Map("check" -> c))
-      .getOrElse(Map.empty[String, String])
     requireNoCaseDuplicates(df.schema, s"create at $root")
-    enforceCheck(df, headers0, s"create at $root")
-    val headers = headers0 + schemaHeaderFor(df) ++ (
-      if (clusterCols.isEmpty) Map.empty[String, String]
-      else Map("cluster" -> clusterCols.mkString(",")))
+    val headers = Map(schemaHeaderFor(df)) ++ clusterCol.map("cluster" -> _)
     // reserved-name mapping (`_metadata`) may already apply at v0
     val entries =
-      writeDataFiles(toPhysical(df, headers), root, clusterCols, buckets)
+      writeDataFiles(toPhysical(df, headers), root, clusterCol, buckets)
     if (!tryCommit(df.sparkSession, root, 0L, headers, entries))
       throw new CommitConflict(s"concurrent create at $root")
     0L
@@ -999,7 +732,6 @@ object TxTable {
       buckets: Int = 8, mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     val pre = latestSnapshot(spark, root)
-    enforceCheck(df, pre.headers, s"append at $root")
     // the checked headers carry any schema the batch ADDS (mergeSchema)
     // including a reserved-name physical mapping — the batch's files
     // must land under those physical names, not pre's
@@ -1007,14 +739,10 @@ object TxTable {
       mergeSchema)
     val entries =
       writeDataFiles(toPhysical(df, preChecked), root,
-        pre.clusterCols, buckets)
+        pre.clusterCol, buckets)
     var attempt = 0
     while (attempt <= maxRetries) {
       val cur = latestSnapshot(spark, root)
-      // a CHECK constraint installed since `pre` must gate THIS commit
-      // too (validate-then-commit is not atomic across retries)
-      if (cur.headers.get("check") != pre.headers.get("check"))
-        enforceCheck(df, cur.headers, s"append at $root")
       // schema validation + union-widening against THIS attempt's tip
       val headers =
         checkSchema(df, cur.headers, s"append at $root", mergeSchema)
@@ -1048,17 +776,14 @@ object TxTable {
       s.headers.get(key).exists(_.toLong >= batchId)
     val pre = latestSnapshot(spark, root)
     if (committed(pre)) return None
-    enforceCheck(df, pre.headers, s"addStreamingBatch at $root")
     checkSchema(df, pre.headers, s"addStreamingBatch at $root")
     val entries =
       writeDataFiles(toPhysical(df, pre.headers), root,
-        pre.clusterCols, buckets)
+        pre.clusterCol, buckets)
     var attempt = 0
     while (attempt <= maxRetries) {
       val cur = latestSnapshot(spark, root)
       if (committed(cur)) return None // raced with our own redelivery
-      if (cur.headers.get("check") != pre.headers.get("check"))
-        enforceCheck(df, cur.headers, s"addStreamingBatch at $root")
       if (tryCommit(spark, root, cur.version + 1,
           cur.headers + (key -> batchId.toString),
           entryLines(cur) ++ dvLines(cur) ++ entries))
@@ -1067,43 +792,6 @@ object TxTable {
     }
     throw new CommitConflict(
       s"addStreamingBatch at $root lost $maxRetries commit races")
-  }
-
-  /** Replace the table contents with `df` — read-modify-write: fails
-    * on any interleaved commit since `expectedVersion` resolved.
-    */
-  def overwrite(df: DataFrame, root: String, expectedVersion: Long,
-      buckets: Int = 8): Long = {
-    val spark = df.sparkSession
-    val cur = snapshot(spark, root, expectedVersion)
-    requireNoCaseDuplicates(df.schema, s"overwrite at $root")
-    enforceCheck(df, cur.headers, s"overwrite at $root")
-    // contents replace wholesale: the declared schema follows the new
-    // frame (legacy tables stay headerless), and with every old data
-    // file dereferenced the column-mapping era ends here — the
-    // replacing files land under LOGICAL names, so the cluster header
-    // is rewritten from the old physical names to the logical ones the
-    // new files carry, and the `dropped` retirement list (which only
-    // guards against resurrecting OLD files' bytes) is cleared
-    val logicalCluster = cur.clusterCols.map(c => logicalClusterCol(cur, c))
-    val headers = {
-      val base =
-        if (cur.headers.contains("schema"))
-          cur.headers - "dropped" + schemaHeaderFor(df)
-        else cur.headers
-      if (logicalCluster.isEmpty) base
-      else base + ("cluster" -> logicalCluster.mkString(","))
-    }
-    // the rename-era mapping ends here, but reserved-name mapping
-    // (`_metadata`) may re-apply through the fresh schema header
-    val entries =
-      writeDataFiles(toPhysical(df, headers), root, logicalCluster,
-        buckets)
-    if (!tryCommit(spark, root, expectedVersion + 1, headers, entries))
-      throw new CommitConflict(
-        s"overwrite at $root: version ${expectedVersion + 1} already " +
-          "committed by a concurrent writer; re-derive from the new snapshot")
-    expectedVersion + 1
   }
 
   /** Transactional MERGE INTO: resolve the latest snapshot, apply
@@ -1141,10 +829,6 @@ object TxTable {
     var committed = -1L
     while (committed < 0) {
       val cur = latestSnapshot(spark, root)
-      // CHECK applies to the rows this merge introduces (upserts);
-      // surviving rows passed at their own write, tombstones remove
-      enforceCheck(source.filter(!coalesce(col(tombstoneCol), lit(false))),
-        cur.headers, s"mergeInto at $root")
       val target = readVersion(spark, root, cur.version)
       val merged = graft.operators.MergeUpsert.merge(
           target, source, keyCol, valueCols, tombstoneCol)
@@ -1172,7 +856,7 @@ object TxTable {
             .map(n => s"$rel/$n")
         }
       val entries = writeDataFiles(toPhysical(merged, cur.headers), root,
-        cur.clusterCols, buckets) ++ cdcEntries
+        cur.clusterCol, buckets) ++ cdcEntries
       if (tryCommit(spark, root, cur.version + 1, cur.headers, entries))
         committed = cur.version + 1
       else if (attempt >= maxRetries)
@@ -1182,29 +866,6 @@ object TxTable {
       else attempt += 1
     }
     committed
-  }
-
-  /** Add (or replace) the table's CHECK constraint — header
-    * `check=<spark sql boolean expr>`, enforced on every subsequent
-    * writer batch ([[append]], [[addStreamingBatch]], [[mergeInto]]
-    * upserts, [[overwrite]], [[create]]) BEFORE any file lands, SQL
-    * semantics (NULL passes). Setting it validates the CURRENT table
-    * once (one scan) so the constraint is an invariant, not a
-    * from-now-on hope. Read-modify-write conflict semantics.
-    */
-  def setCheckConstraint(
-      spark: SparkSession, root: String, checkExpr: String): Long = {
-    require(!checkExpr.contains("\n"),
-      "check expression must be single-line (manifest header format)")
-    val cur = latestSnapshot(spark, root)
-    enforceCheck(readVersion(spark, root, cur.version),
-      Map("check" -> checkExpr), s"setCheckConstraint at $root")
-    if (!tryCommit(spark, root, cur.version + 1,
-        cur.headers + ("check" -> checkExpr),
-        entryLines(cur) ++ dvLines(cur)))
-      throw new CommitConflict(
-        s"setCheckConstraint at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
   }
 
   /** Enable/disable the table's CHANGE FEED (header `cdc=true` — the
@@ -1267,17 +928,6 @@ object TxTable {
         col("_c.ct").as("_change_type"): _*)
   }
 
-  /** Drop the CHECK constraint (header removed; data untouched). */
-  def dropCheckConstraint(spark: SparkSession, root: String): Long = {
-    val cur = latestSnapshot(spark, root)
-    require(cur.headers.contains("check"), s"no CHECK constraint at $root")
-    if (!tryCommit(spark, root, cur.version + 1, cur.headers - "check",
-        entryLines(cur) ++ dvLines(cur)))
-      throw new CommitConflict(
-        s"dropCheckConstraint at $root: snapshot v${cur.version} went stale")
-    cur.version + 1
-  }
-
   /** RESTORE the table to an earlier version AS A NEW COMMIT (the
     * Delta `RESTORE` shape): version v+1 re-lists `toVersion`'s
     * complete state — data files, stats, deletion vectors, and
@@ -1303,22 +953,6 @@ object TxTable {
     cur.version + 1
   }
 
-  /** DESCRIBE HISTORY: one row per committed version — (version,
-    * n_files, n_dv_files, headers as sorted `k=v` CSV). `n_dv_files`
-    * counts the version's deletion-vector position files (its
-    * merge-on-read state). Manifest metadata only; no data file is
-    * opened.
-    */
-  def history(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    versions(spark, root).map { v =>
-      val s = snapshot(spark, root, v)
-      (v, s.files.size.toLong, s.dvFiles.size.toLong,
-        s.headers.toSeq.sortBy(_._1)
-          .map { case (k, x) => s"$k=$x" }.mkString(","))
-    }.toDF("version", "n_files", "n_dv_files", "headers")
-  }
-
   /** MERGE-ON-READ delete: rows matching `predicate` disappear from
     * every subsequent read WITHOUT rewriting a single data byte — the
     * deletion-vector design (Delta DVs / Iceberg position deletes,
@@ -1335,7 +969,7 @@ object TxTable {
     *    down normally) + one position write; read-side cost is one
     *    anti-join against the accumulated positions until a rewrite
     *    materializes them.
-    *  - [[mergeInto]]/[[compact]]/[[overwrite]] MATERIALIZE deletes:
+    *  - [[mergeInto]]/[[compact]] MATERIALIZE deletes:
     *    they read through the DVs and rewrite survivors, so their
     *    commits drop the `dv/` lines; [[autoCompact]] carries them
     *    (positions of rewritten small files go stale harmlessly —
@@ -1377,7 +1011,7 @@ object TxTable {
       _.files, maxRetries, dvBuckets)
   }
 
-  /** [[deleteWhere]] restricted to the FIRST cluster column's range
+  /** [[deleteWhere]] restricted to the cluster column's range
     * [lo, hi], with the matching scan FILE-PRUNED by manifest stats —
     * a key-range delete on a 100 TB clustered table opens only the
     * files whose [min,max] overlaps the range (the [[readRange]]
@@ -1391,9 +1025,8 @@ object TxTable {
     val c = snap.clusterCol.getOrElse(
       throw new IllegalArgumentException(
         s"TxTable $root has no cluster column; deleteRange needs one"))
-    deleteImpl(spark, root,
-      _.filter(col(logicalClusterCol(snap, c)).between(lo, hi)),
-      s => prunedFiles(s, 0, lo, hi), maxRetries, dvBuckets)
+    deleteImpl(spark, root, _.filter(col(c).between(lo, hi)),
+      s => prunedFiles(s, lo, hi), maxRetries, dvBuckets)
   }
 
   private def deleteImpl(
@@ -1463,70 +1096,21 @@ object TxTable {
   /** Rewrite the table into `buckets` files — the small-file
     * compaction per-batch streaming commits need (every micro-batch
     * adds files; the read amortizes only if something folds them back
-    * down). Contents are bit-identical (same rows, re-clustered);
-    * read-modify-write conflict semantics. Returns the new version.
+    * down). Contents are bit-identical (same rows, re-clustered, DVs
+    * materialized); read-modify-write conflict semantics. Returns the
+    * new version.
     */
-  def compact(spark: SparkSession, root: String, buckets: Int = 8): Long =
-    rewriteClustered(spark, root,
-      latestSnapshot(spark, root).clusterCols, buckets, "compact",
-      keepHeader = true)
-
-  /** RECLUSTER (the `OPTIMIZE … ZORDER BY` face): rewrite the table's
-    * rows into a NEW clustering layout — 0 (unclustered), 1 (range) or
-    * 2 (z-order) columns — publishing new files, fresh per-file
-    * min/max stats, and the updated `cluster=` header in ONE commit.
-    * This is how a table whose query pattern changed (a second hot
-    * predicate column appears) migrates to 2-D skipping without a
-    * recreate: at 100 TB it is one table-scale rewrite that buys every
-    * subsequent [[readRange]]/[[readBox]]/[[deleteRange]] file-level
-    * pruning on the new keys. Same contracts as [[compact]]:
-    * read-modify-write conflict semantics, DVs MATERIALIZE (survivors
-    * rewritten). Returns the new version.
-    */
-  def recluster(
-      spark: SparkSession, root: String, clusterCols: Seq[String],
-      buckets: Int = 8): Long = {
-    // callers name LOGICAL columns; the layout, stats, and the
-    // cluster= header live under PHYSICAL names (column mapping)
-    val cur = latestSnapshot(spark, root)
-    val phys = clusterCols.map { c =>
-      cur.tableSchema
-        .flatMap(_.fields.find(_.name.equalsIgnoreCase(c))
-          .map(physicalName))
-        .getOrElse(c)
-    }
-    rewriteClustered(spark, root, phys, buckets, "recluster",
-      keepHeader = false)
-  }
-
-  /** Shared rewrite body of [[compact]] and [[recluster]]: read the
-    * latest snapshot through its DVs, rewrite into `clusterCols`
-    * layout and commit the new files alone. `keepHeader` keeps the
-    * current `cluster=` header (compact); otherwise it follows
-    * `clusterCols` (recluster).
-    */
-  private def rewriteClustered(
-      spark: SparkSession, root: String, clusterCols: Seq[String],
-      buckets: Int, op: String, keepHeader: Boolean): Long = {
-    require(clusterCols.size <= 2,
-      s"TxTable supports at most 2 cluster columns, got $clusterCols")
+  def compact(spark: SparkSession, root: String, buckets: Int = 8): Long = {
     val cur = latestSnapshot(spark, root)
     // the rewrite lands under PHYSICAL names (by-name consistency with
-    // every older file); cluster cols arrive physical from compact
-    // (header values) and were mapped by recluster's entry point
+    // every older file)
     val all = toPhysical(readVersion(spark, root, cur.version), cur.headers)
-    val entries = clusterCols match {
-      case Seq() => writeDataFiles(all.coalesce(buckets), root, Nil, buckets)
-      case cs    => writeDataFiles(all, root, cs, buckets)
-    }
-    val headers =
-      if (keepHeader) cur.headers
-      else if (clusterCols.isEmpty) cur.headers - "cluster"
-      else cur.headers + ("cluster" -> clusterCols.mkString(","))
-    if (!tryCommit(spark, root, cur.version + 1, headers,
-        entries))
+    val entries = writeDataFiles(
+      if (cur.clusterCol.isEmpty) all.coalesce(buckets) else all,
+      root, cur.clusterCol, buckets)
+    if (!tryCommit(spark, root, cur.version + 1, cur.headers, entries))
       throw new CommitConflict(
-        s"$op at $root: snapshot v${cur.version} went stale")
+        s"compact at $root: snapshot v${cur.version} went stale")
     cur.version + 1
   }
 
@@ -1556,7 +1140,7 @@ object TxTable {
     val outFiles = math.max(1,
       math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
     val entries = writeDataFiles(toPhysical(smallDf, cur.headers), root,
-      cur.clusterCols, outFiles)
+      cur.clusterCol, outFiles)
     val keptLarge = large.map(_._1).toSet
     val keptLines = entryLines(cur).filter { line =>
       keptLarge.contains(line.split("\t").head)

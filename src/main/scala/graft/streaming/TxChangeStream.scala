@@ -165,8 +165,8 @@ object TxChangeStream {
     val byLower = (0 until fileType.getFieldCount).map { i =>
       fileType.getFieldName(i).toLowerCase(java.util.Locale.ROOT) -> i
     }.toMap
-    // resolve by the declared PHYSICAL name (column mapping: a renamed
-    // column's bytes live under its original name in every file)
+    // resolve by the declared PHYSICAL name (column mapping: a reserved
+    // name's bytes live under its mapped name in every file)
     schema.fields.map(f =>
       byLower.getOrElse(
         TxTable.physicalName(f).toLowerCase(java.util.Locale.ROOT), -1))

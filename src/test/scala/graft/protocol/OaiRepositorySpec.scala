@@ -274,6 +274,30 @@ class OaiRepositorySpec extends SparkSpec {
     assert((xml \\ "ListIdentifiers" \\ "header").nonEmpty)
   }
 
+  test("date-only from/until are UTC days whatever the JVM's time zone") {
+    val s = spark
+    import s.implicits._
+    val stamped = Fixtures.minimal.copy(
+      _metadata = Fixtures.meta(updated = "2024-01-14T12:00:00Z"))
+    val dated = new OaiRepository(
+      new StudyStore(s.createDataset(Seq(stamped)).toDF()), Nil,
+      OaiConfig(listSize = 2), now = () => Fixtures.ts("2025-01-01T00:00:00Z"))
+    def ids(args: (String, String)*): Seq[String] =
+      (XML.loadString(dated.handle(Map("verb" -> "ListIdentifiers",
+        "metadataPrefix" -> "oai_dc") ++ args)) \\ "header" \\ "identifier")
+        .map(_.text)
+    val zone = java.util.TimeZone.getDefault
+    // UTC+14: local midnight of 2024-01-15 is 2024-01-14T10:00:00Z
+    java.util.TimeZone.setDefault(
+      java.util.TimeZone.getTimeZone("Pacific/Kiritimati"))
+    try {
+      assert(ids("from" -> "2024-01-15").isEmpty)
+      assert(ids("from" -> "2024-01-14") == Seq("agg_id_1"))
+      assert(ids("until" -> "2024-01-14") == Seq("agg_id_1"))
+      assert(ids("until" -> "2024-01-13").isEmpty)
+    } finally java.util.TimeZone.setDefault(zone)
+  }
+
   test("bad resumption token → badResumptionToken error") {
     val xml = XML.loadString(repo.handle(
       Map("verb" -> "ListRecords", "metadataPrefix" -> "oai_dc",

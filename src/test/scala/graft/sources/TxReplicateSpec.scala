@@ -155,27 +155,25 @@ class TxReplicateSpec extends SparkSpec {
     "semi-join batches reach the same state as literal In batches") {
     val dstA = Files.createTempDirectory("graft-rep-thr-a-").toString
     val dstB = Files.createTempDirectory("graft-rep-thr-b-").toString
-    val base = spark.range(0, 3000)
+    val n = TxReplicate.MaxInlineDeleteKeys + 2000L
+    val base = spark.range(0, n + 1000)
       .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
     TxTable.create(base, dstA)
     TxTable.create(base, dstB)
-    val events = spark.range(0, 2000)
+    // A: over the threshold → the apply masks by broadcast semi-join
+    val events = spark.range(0, n)
       .select(col("id").as("k"), lit("x").as("v"),
         lit("delete").as("_change_type"))
-    // A: inline path (default threshold 10k > 2k keys)
     assert(TxReplicate.applyTyped(spark, dstA, "k", events,
       streamId = "mirror", batchId = 1L) == 2)
-    // B: forced over the threshold → broadcast semi-join mask
-    spark.conf.set("spark.graft.replicate.maxInlineDeleteKeys", "100")
-    try assert(TxReplicate.applyTyped(spark, dstB, "k", events,
-      streamId = "mirror", batchId = 1L) == 2)
-    finally spark.conf.unset("spark.graft.replicate.maxInlineDeleteKeys")
+    // B: the twin masks the same keys as one literal In list
+    TxTable.deleteWhere(spark, dstB, col("k").isInCollection(0L until n))
     val a = TxTable.read(spark, dstA).as[(Long, String)].collect().toSet
     val b = TxTable.read(spark, dstB).as[(Long, String)].collect().toSet
     assert(a == b)
-    assert(a.size == 1000 && a.forall(_._1 >= 2000))
-    // both advanced the same high-water → replay skips on both
-    assert(TxReplicate.applyTyped(spark, dstB, "k", events,
+    assert(a.size == 1000 && a.forall(_._1 >= n))
+    // the apply advanced the high-water → its replay skips
+    assert(TxReplicate.applyTyped(spark, dstA, "k", events,
       streamId = "mirror", batchId = 1L) == 0)
   }
 

@@ -134,13 +134,12 @@ class TxTableDvSpec extends SparkSpec {
     TxTable.restore(spark, root, toVersion = 1L)
     assert(TxTable.read(spark, root).count() === 30L)
     assert(TxTable.latestSnapshot(spark, root).dvFiles.nonEmpty)
-    val h = TxTable.history(spark, root)
-      .orderBy("version")
-      .select("version", "n_files", "n_dv_files")
-      .as[(Long, Long, Long)].collect()
-    assert(h.map(_._1).toSeq === (0L to 4L))
-    assert(h(0)._3 === 0L && h(1)._3 === 1L) // delete introduced the DV
-    assert(h(3)._3 === 0L && h(4)._3 === 1L) // restores mirror targets
+    assert(TxTable.versions(spark, root) === (0L to 4L))
+    val h = (0L to 4L).map(v => TxTable.snapshot(spark, root, v))
+    assert(h(0).dvFiles.isEmpty && h(1).dvFiles.size === 1) // the delete's DV
+    // restores mirror their targets: same data files, same DVs
+    assert(h(3).files === h(0).files && h(3).dvFiles.isEmpty)
+    assert(h(4).files === h(1).files && h(4).dvFiles === h(1).dvFiles)
     intercept[IllegalArgumentException] {
       TxTable.restore(spark, root, toVersion = 99L)
     }
@@ -152,7 +151,7 @@ class TxTableDvSpec extends SparkSpec {
       root, clusterCol = Some("k"), buckets = 8)
     // the range touches a strict subset of files (manifest stats)
     val s0 = TxTable.latestSnapshot(spark, root)
-    val cand = TxTable.prunedFiles(s0, 0, 50L, 99L)
+    val cand = TxTable.prunedFiles(s0, 50L, 99L)
     assert(cand.nonEmpty && cand.size < s0.files.size,
       s"range matched ${cand.size} of ${s0.files.size} files")
     TxTable.deleteRange(spark, root, 50L, 99L)
@@ -164,25 +163,6 @@ class TxTableDvSpec extends SparkSpec {
     TxTable.create(Seq((1L, "a")).toDF("k", "v"), flat)
     intercept[IllegalArgumentException] {
       TxTable.deleteRange(spark, flat, 0L, 10L)
-    }
-  }
-
-  test("timestamp time travel: readAsOf picks the newest commit at " +
-    "or before the clock") {
-    val root = Files.createTempDirectory("graft-asof-").toString
-    TxTable.create(Seq((1L, "a")).toDF("id", "tag"), root) // v0
-    Thread.sleep(20)
-    val betweenV0V1 = System.currentTimeMillis()
-    Thread.sleep(20)
-    TxTable.append(Seq((2L, "b")).toDF("id", "tag"), root) // v1
-    Thread.sleep(20)
-    val afterV1 = System.currentTimeMillis()
-    assert(TxTable.versionAsOf(spark, root, betweenV0V1) === 0L)
-    assert(TxTable.readAsOf(spark, root, betweenV0V1).count() === 1L)
-    assert(TxTable.versionAsOf(spark, root, afterV1) === 1L)
-    assert(TxTable.readAsOf(spark, root, afterV1).count() === 2L)
-    intercept[IllegalArgumentException] {
-      TxTable.versionAsOf(spark, root, betweenV0V1 - 3600000L)
     }
   }
 }

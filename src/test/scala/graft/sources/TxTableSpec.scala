@@ -83,17 +83,30 @@ class TxTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TxTable.versions(spark, root) == Seq(0L, 1L, 2L))
   }
 
-  test("overwrite fails with CommitConflict when the snapshot is stale") {
+  test("mergeInto fails with CommitConflict when a commit lands " +
+    "mid-merge; nothing half-visible") {
     val root = tmpRoot()
     TxTable.create(rows(1L, 2L), root)
-    val stale = TxTable.latestSnapshot(spark, root).version // 0
-    TxTable.append(rows(3L), root) // someone commits v1
-    intercept[TxTable.CommitConflict] {
-      TxTable.overwrite(rows(9L), root, stale)
+    val v0Files = TxTable.snapshot(spark, root, 0L).files
+    val stolen = new java.io.File(new java.io.File(root, "_txlog"),
+      f"${1L}%020d.txn").toPath
+    // a concurrent writer publishes v1 (v0's file set) while the
+    // merge's own job runs, i.e. after the merge resolved v0
+    val steal = udf { (id: Long) =>
+      try java.nio.file.Files.write(stolen,
+        ("version=1" +: v0Files).mkString("", "\n", "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      catch { case _: java.nio.file.FileAlreadyExistsException => }
+      id
     }
-    // nothing half-visible: table unchanged
-    assert(TxTable.read(spark, root).count() == 3L)
+    val changes = rows(3L).withColumn("id", steal(col("id")))
+      .withColumn("del", lit(false))
+    intercept[TxTable.CommitConflict] {
+      TxTable.mergeInto(root, changes, "id", Seq("text"), "del")
+    }
     assert(TxTable.versions(spark, root) == Seq(0L, 1L))
+    assert(TxTable.read(spark, root).collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L))
   }
 
   test("mergeInto applies CDC semantics as one atomic version") {
@@ -220,79 +233,6 @@ class TxTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.collect().map(_.getLong(0)).toSet == Set(4L))
   }
 
-  test("z-order clustering: 2-column stats, readBox prunes on both dims") {
-    val s = spark
-    import s.implicits._
-    val root = tmpRoot()
-    // 32×32 grid: x and y each uniform in [0,31]
-    val grid = (0 until 1024).map(i => (i.toLong, (i % 32).toLong,
-      (i / 32).toLong)).toDF("id", "x", "y")
-    TxTable.createClustered(grid, root, Seq("x", "y"), buckets = 16)
-    val snap = TxTable.latestSnapshot(spark, root)
-    assert(snap.clusterCols == Seq("x", "y"))
-    assert(snap.files.size == 16)
-    // every file carries TWO stat pairs
-    assert(snap.files.forall(f => snap.stats.get(f).exists(_.size == 2)))
-    // a small box must prune on both dimensions: strictly fewer files
-    // than either single-dimension range alone
-    val boxFiles = TxTable.prunedFiles(snap, 0, 4, 7)
-      .intersect(TxTable.prunedFiles(snap, 1, 4, 7))
-    assert(boxFiles.size < snap.files.size,
-      s"box touched all ${snap.files.size} files")
-    // the answer is exact regardless of pruning
-    val got = TxTable.readBox(spark, root, 4, 7, 4, 7)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val want = (0 until 1024).filter(i =>
-      (i % 32) >= 4 && (i % 32) <= 7 && (i / 32) >= 4 && (i / 32) <= 7)
-      .map(_.toLong).toSet
-    assert(got == want)
-    // z-layout means a range on EITHER single column also prunes
-    assert(TxTable.prunedFiles(snap, 0, 0, 3).size < snap.files.size)
-    assert(TxTable.prunedFiles(snap, 1, 0, 3).size < snap.files.size)
-    // appends inherit the z-order clustering
-    val extra = Seq((5000L, 2L, 2L)).toDF("id", "x", "y")
-    TxTable.append(extra, root)
-    val got2 = TxTable.readBox(spark, root, 0, 3, 0, 3)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(got2.contains(5000L))
-  }
-
-  test("recluster migrates range-clustered to z-order in one commit: " +
-    "same rows, fresh 2-D stats prune, DVs materialize, header updated") {
-    val s = spark
-    import s.implicits._
-    val root = tmpRoot()
-    val grid = (0 until 1024).map(i => (i.toLong, (i % 32).toLong,
-      (i / 32).toLong)).toDF("id", "x", "y")
-    TxTable.create(grid, root, clusterCol = Some("x"), buckets = 16) // v0
-    TxTable.deleteWhere(spark, root, col("id") % 100L === 0L) // v1: DV
-    val v = TxTable.recluster(spark, root, Seq("x", "y"), buckets = 16) // v2
-    assert(v == 2L)
-    val snap = TxTable.latestSnapshot(spark, root)
-    assert(snap.clusterCols == Seq("x", "y"))
-    // the rewrite materialized the DVs
-    assert(snap.dvFiles.isEmpty)
-    assert(TxTable.read(spark, root).count() === 1024L - 11L)
-    // both dimensions carry stats and a box prunes files
-    assert(snap.files.forall(f => snap.stats.get(f).exists(_.size == 2)))
-    val boxFiles = TxTable.prunedFiles(snap, 0, 4, 7)
-      .intersect(TxTable.prunedFiles(snap, 1, 4, 7))
-    assert(boxFiles.size < snap.files.size)
-    // exact answer through the new layout, deletes stay gone
-    val got = TxTable.readBox(spark, root, 4, 7, 4, 7)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val want = (0 until 1024).filter(i =>
-      (i % 32) >= 4 && (i % 32) <= 7 && (i / 32) >= 4 && (i / 32) <= 7 &&
-        i % 100 != 0).map(_.toLong).toSet
-    assert(got == want)
-    // pre-recluster time travel still serves the 1-D layout + DVs
-    assert(TxTable.readVersion(spark, root, 1L).count() === 1024L - 11L)
-    // de-clustering works too (header dropped)
-    TxTable.recluster(spark, root, Nil, buckets = 4)
-    assert(TxTable.latestSnapshot(spark, root).clusterCols.isEmpty)
-    assert(TxTable.read(spark, root).count() === 1024L - 11L)
-  }
-
   test("autoCompact folds only small files and keeps large ones") {
     val s = spark
     import s.implicits._
@@ -300,7 +240,7 @@ class TxTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one "large" initial file (single bucket) + several small appends
     val big = (0L until 2000L).map(i => (i, s"text-$i"))
       .toDF("id", "text")
-    TxTable.createClustered(big, root, Seq("id"), buckets = 1)
+    TxTable.create(big, root, clusterCol = Some("id"), buckets = 1)
     (0 until 5).foreach { k =>
       TxTable.append(rows(10000L + k), root, buckets = 1)
     }
@@ -320,7 +260,7 @@ class TxTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.files.size == 2)
     assert(after.files.contains(bigFile))
     // stats survive for the kept large file
-    assert(after.stats.get(bigFile).exists(_.nonEmpty))
+    assert(after.stats.contains(bigFile))
     // contents identical
     assert(TxTable.read(spark, root).count() == 2005L)
     // below minSmallFiles → no-op

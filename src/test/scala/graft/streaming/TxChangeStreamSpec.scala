@@ -376,51 +376,26 @@ class TxChangeStreamSpec extends SparkSpec {
     assert(TxTable.readChangesTyped(spark, root, 3L, 3L).count() === 0L)
   }
 
-  test("a change range SPANNING a renameColumn serves both generations " +
-    "under the NEW logical name, stream and typed batch alike") {
+  test("a change range SPANNING a mergeSchema widening serves the " +
+    "older generation with the added column as null, stream and typed " +
+    "batch alike") {
     val (root, df) = mkTable()
-    TxTable.create(df.filter($"id" <= 10), root)          // v0 gen-1 "name"
-    TxTable.renameColumn(spark, root, "name", "label")    // v1 metadata-only
-    TxTable.append(df.filter($"id" > 10 && $"id" <= 20)
-      .withColumnRenamed("name", "label"), root)          // v2 gen-2
-    // streaming face from version 0: schema is the renamed one, rows
-    // from BOTH generations carry their original values under it
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt-").toString
-    drain(TxTable.readChangeStream(spark, root), "cdc_rename_span", ckpt)
-    val got = spark.table("cdc_rename_span")
-    assert(got.columns.contains("label") && !got.columns.contains("name"))
-    assert(got.count() === 20L)
-    assert(got.filter($"label".isNull).count() === 0L)
-    assert(got.filter($"id" === 3L).select("label").as[String].head()
-      === "name3")
-    assert(got.filter($"id" === 15L)
-      .select("_commit_version").as[Long].head() === 2L)
-    // typed batch twin over the same range agrees
-    val typed = TxTable.readChangesTyped(spark, root, -1L, 2L)
+    TxTable.create(df.filter($"id" <= 10).drop("emb"), root)   // v0 narrow
+    TxTable.append(df.filter($"id" > 10 && $"id" <= 20), root,
+      mergeSchema = true)                                     // v1 wide
+    val typed = TxTable.readChangesTyped(spark, root, -1L, 1L)
+    assert(typed.columns.contains("emb"))
     assert(typed.filter($"_change_type" === "insert").count() === 20L)
-    assert(typed.filter($"id" === 7L).select("label").as[String].head()
-      === "name7")
-  }
-
-  test("a change range SPANNING a dropColumn excludes the dropped " +
-    "column from every event — pre-drop generations do not resurrect it") {
-    val (root, df) = mkTable()
-    TxTable.create(df.filter($"id" <= 10), root)          // v0 wide
-    TxTable.dropColumn(spark, root, "emb")                // v1
-    TxTable.append(df.filter($"id" > 10 && $"id" <= 20)
-      .drop("emb"), root)                                 // v2 narrow
-    val typed = TxTable.readChangesTyped(spark, root, -1L, 2L)
-    assert(!typed.columns.contains("emb"),
-      s"dropped column resurfaced: ${typed.columns.toSeq}")
-    assert(typed.filter($"_change_type" === "insert").count() === 20L)
-    assert(typed.filter($"id" === 4L).select("score").as[Double].head()
-      === 6.0)
-    // the streaming face takes the destination schema too
+    assert(typed.filter($"emb".isNull)
+      .select("id").as[Long].collect().sorted.toSeq === (1L to 10L))
+    assert(typed.filter($"id" === 12L).select("emb").as[Seq[Float]].head()
+      === Seq(12f, -12f))
+    // the streaming face serves the destination schema too
     val ckpt = Files.createTempDirectory("graft-cdc-ckpt-").toString
-    drain(TxTable.readChangeStream(spark, root), "cdc_drop_span", ckpt)
-    val got = spark.table("cdc_drop_span")
-    assert(!got.columns.contains("emb"))
+    drain(TxTable.readChangeStream(spark, root), "cdc_widen_span", ckpt)
+    val got = spark.table("cdc_widen_span")
     assert(got.count() === 20L)
+    assert(got.filter($"emb".isNull).count() === 10L)
   }
 
   test("null fields survive the record reader") {
